@@ -6,14 +6,17 @@ surprise shuffles) are visible in review.
 Checks asserted here:
 * the hwm frame filter reaches the parquet scan (PushedFilters);
 * the typed projection + fold sit inside WholeStageCodegen spans;
-* the only Python node is the one ArrowEvalPython/MapInArrow decode;
+* the only Python node is the one ArrowEvalPython/MapInArrow decode
+  (a Python-built relation, ``applySchemaToPythonRDD``, counts too);
 * the merge join carries no unexpected extra shuffle.
 """
 
 from __future__ import annotations
 
 import io
+import itertools
 import os
+import shutil
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -23,14 +26,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 HERE = os.path.dirname(os.path.abspath(__file__))
 
 
+# a relation built by createDataFrame(<Python list>) scans as
+# "Scan ExistingRDD" over applySchemaToPythonRDD: it starts a Python
+# task per partition, so it counts as a Python stage too.  A Scan
+# ExistingRDD over a JVM RDD (localCheckpoint) runs no Python.
 _PY_NODES = ("EvalPython", "MapInPandas", "MapInArrow",
-             "FlatMapGroupsInPandas", "AggregateInPandas")
+             "FlatMapGroupsInPandas", "AggregateInPandas",
+             "applySchemaToPythonRDD")
 
 
 def _has_python(plan: str) -> bool:
-    """True only for real Python EXECUTION nodes — the string
-    'Python' alone also appears in createDataFrame's
-    applySchemaToPythonRDD scan description."""
+    """True for any node that runs Python tasks."""
     return any(n in plan for n in _PY_NODES)
 
 
@@ -56,12 +62,28 @@ def main():
     from pyspark.sql import functions as F
 
     # AQE hides WholeStageCodegen markers in pre-execution explain
-    # output; disable it here so the audit sees the final plan shape
+    # output; disable it here so the audit sees the final plan shape.
+    # The audit's inputs are tiny parquet files standing in for large
+    # tables: no size-based broadcast, so join shapes are the at-scale
+    # ones (explicit broadcast hints still apply).
     spark = build_session(
         master="local[4]", shuffle_partitions=8,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
+        extra_conf={
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
     )
     wd = tempfile.mkdtemp()
+    n_inputs = itertools.count()
+
+    def table(rows, ddl):
+        """An audit input as a parquet scan, like the engine's real
+        inputs; a createDataFrame relation would itself be a Python
+        stage in every plan built on it."""
+        path = os.path.join(wd, f"input{next(n_inputs)}.parquet")
+        spark.createDataFrame(rows, ddl).write.parquet(path)
+        return spark.read.parquet(path)
+
     stream = generate_stream(seed=5, n_convs=10, max_turns=6, n_extra_txns=20)
     fp = os.path.join(wd, "frames.parquet")
     write_frames_parquet(stream, fp)
@@ -96,11 +118,11 @@ def main():
     # product (the r3 verdict's scale flag)
     from pg_pb3_ld_spark.functions import ann
 
-    emb = spark.createDataFrame(
+    emb = table(
         [(i, [float(i % 7), float(i % 5), 1.0, 0.5]) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
-    cents = spark.createDataFrame(
+    cents = table(
         [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
         "list_id int, embedding array<double>",
     )
@@ -113,7 +135,7 @@ def main():
     # aggregation keys
     from pg_pb3_ld_spark.functions import textops
 
-    docs = spark.createDataFrame(
+    docs = table(
         [(i, f"w{i % 9} x{i % 4} " * 6) for i in range(60)],
         "doc_id long, text string",
     )
@@ -126,14 +148,14 @@ def main():
     rep_plan = plan_of(textops.repetition_signals(docs))
     sections.append(("repetition signals (expect hash aggs with "
                      "partial combine, no Python, no Window)", rep_plan))
-    turns = spark.createDataFrame(
+    turns = table(
         [(i // 5, i % 5, "user", f"t{i}") for i in range(50)],
         "conv_id long, turn_idx int, role string, text string",
     )
     render_plan = plan_of(textops.render_chat(turns))
     sections.append(("chat rendering (expect ONE aggregation on "
                      "conv_id, no Python)", render_plan))
-    pack_base = spark.createDataFrame(
+    pack_base = table(
         [(i, i % 4, 10 + i % 17) for i in range(60)],
         "doc_id long, shard long, n_tokens int",
     )
@@ -146,7 +168,7 @@ def main():
     from pg_pb3_ld_spark.functions.layout import morton16, quantize16
     from pg_pb3_ld_spark.streaming.windows import windowed_rates
 
-    ev = spark.createDataFrame(
+    ev = table(
         [(i, i % 7, 1000000000 + i * 900, f"t{i % 3}", float(i % 11))
          for i in range(80)],
         "event_id long, user_id long, us long, event_type string, "
@@ -192,7 +214,7 @@ def main():
     sections.append(("as-of join (expect ONE user_id hash exchange, "
                      "no SortMergeJoin/NestedLoop)", asof_plan))
 
-    iv = spark.createDataFrame(
+    iv = table(
         [(1, 1000, 5000), (2, 9000, 12000)], "iid int, s long, e long"
     )
     ij_plan = plan_of(
@@ -202,7 +224,7 @@ def main():
     sections.append(("interval join (expect equi hash/broadcast join "
                      "on bucket, NO BroadcastNestedLoop)", ij_plan))
 
-    mm = spark.createDataFrame([(0, 65535)], "mn long, mx long")
+    mm = table([(0, 65535)], "mn long, mx long")
     z_plan = plan_of(
         ev.join(F.broadcast(mm)).select(
             "event_id",
@@ -289,7 +311,7 @@ def main():
     # verify as a codegen filter, no Window, no nested loop
     from pg_pb3_ld_spark.functions import imagehash
 
-    ih = spark.createDataFrame(
+    ih = table(
         [(i, (i * 2654435761) % (2**32), (i * 40503) % (2**32))
          for i in range(50)],
         "media_id long, hash_hi long, hash_lo long",
@@ -324,7 +346,7 @@ def main():
     from pg_pb3_ld_spark.functions import dedup as _dd
     from pg_pb3_ld_spark.functions import layout as _lo
 
-    members = spark.createDataFrame(
+    members = table(
         [(i % 3, i, [float(i % 7), 1.0, 0.5, 0.0]) for i in range(30)],
         "list_id int, vec_id long, embedding array<double>",
     )
@@ -340,7 +362,7 @@ def main():
     from pg_pb3_ld_spark.functions.sketches import cms_cells, cms_estimate
     from pg_pb3_ld_spark.functions.textops import transcript_qa
 
-    qa_src = spark.createDataFrame(
+    qa_src = table(
         [(str(i % 5), i % 4, "user" if i % 2 else "assistant", "t")
          for i in range(40)],
         "conv_id string, turn_idx int, role string, text string",
@@ -370,7 +392,7 @@ def main():
         preference_pairs,
     )
 
-    tree = spark.createDataFrame(
+    tree = table(
         [(c, i, i - 1 if i else None,
           "assistant" if i % 2 else "user", (c * 7 + i) % 5)
          for c in range(4) for i in range(6)],
@@ -394,7 +416,7 @@ def main():
         shard_invalidation,
     )
 
-    subj_df = spark.createDataFrame(
+    subj_df = table(
         [(i, f"user{i % 9:02d}", f"by user{i % 9:02d}: t") for i in range(30)],
         "doc_id long, author string, body string",
     )
@@ -422,7 +444,7 @@ def main():
     )
     from pg_pb3_ld_spark.functions.textops import best_paths, context_fit
 
-    pref = spark.createDataFrame(
+    pref = table(
         [((i * 3) % 4, (i * 5 + 1) % 4) for i in range(40)],
         "winner_model int, loser_model int",
     ).where(F.col("winner_model") != F.col("loser_model"))
@@ -454,7 +476,7 @@ def main():
                      "ranking + equi join-backs, no Window, no "
                      "NestedLoop, no Python)", best_plan))
 
-    chat = spark.createDataFrame(
+    chat = table(
         [(c, i,
           "system" if i == 0 else ("user" if i % 2 else "assistant"),
           40 + 13 * i)
@@ -466,12 +488,12 @@ def main():
                      "exchange shared by both window passes, no "
                      "Python)", cf_plan))
 
-    refresh_changes = spark.createDataFrame(
+    refresh_changes = table(
         [(f"c{i}", ("INSERT", "UPDATE", "DELETE")[i % 3])
          for i in range(30)],
         "conv_id string, change_type string",
     )
-    refresh_cur = spark.createDataFrame(
+    refresh_cur = table(
         [(f"c{i}",) for i in range(40)], "conv_id string",
     )
     srp_plan = plan_of(shard_refresh_plan(
@@ -625,6 +647,10 @@ def main():
         "single python stage": sections[2][1].count("MapInArrow") +
                                sections[2][1].count("ArrowEvalPython") +
                                sections[2][1].count("PythonMapInArrow") >= 1,
+        "gate watermark built on the JVM (Range, no Python scan)": (
+            not _has_python(sections[2][1].replace("MapInArrow", ""))
+            and "Range" in sections[2][1]
+        ),
         "whole-stage codegen present": (
             "codegen id" in sections[2][1]
             or "WholeStageCodegen" in sections[2][1]
@@ -663,6 +689,7 @@ def main():
         f.write("\n".join(out))
     print({k: bool(v) for k, v in checks.items()})
     spark.stop()
+    shutil.rmtree(wd, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -2388,6 +2388,11 @@ def q_corpus_build_funnel(spark, sf_dir):
 
     is_eval = (F.col("doc_id") % 41 == 0) & (F.col("doc_id") < 410)
 
+    # every frame this query persists, dropped on every way out —
+    # an exception in the main thread included (the pool's exit
+    # waits for _dec, so its frame is listed by then)
+    cached = []
+
     # the classifier fit (8 sequential tiny aggs) AND the
     # decontaminate-Bloom pass are each independent of the dedup/CC
     # chain until the join below — run both from driver threads so
@@ -2400,61 +2405,66 @@ def q_corpus_build_funnel(spark, sf_dir):
         d = dedup.decontaminate_bloom(
             docs.where(~is_eval), docs.where(is_eval), threshold=0.5
         ).select("doc_id", "flagged").persist()
+        cached.append(d)
         d.count()
         return d
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fit_fut = pool.submit(classifier.logreg_fit, feat, 8, 2.0)
-        dec_fut = pool.submit(_dec)
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fit_fut = pool.submit(classifier.logreg_fit, feat, 8, 2.0)
+            dec_fut = pool.submit(_dec)
 
-        n_raw = docs.count()
+            n_raw = docs.count()
 
-        clusters = dedup.near_dup_clusters(docs, threshold=0.5)
-        keep = clusters.where("keep").select("doc_id")
-        n_dedup = keep.count()
+            clusters = dedup.near_dup_clusters(docs, threshold=0.5)
+            keep = clusters.where("keep").select("doc_id")
+            n_dedup = keep.count()
 
-        dec = dec_fut.result()
-        # clean feeds three consumers (its count, the quality join,
-        # and through qual the split agg) and qual two — uncached,
-        # the decontaminate-Bloom chain re-executed 3× and the
-        # classifier scoring 2× per funnel run.  Both frames are
-        # id-only (8 B/row), the same bounded-width criterion as the
-        # round-6 §9 caches; each count right after the persist
-        # materializes it, and both are dropped before returning.
-        clean = (
-            keep.where(~is_eval)
-            .join(dec, "doc_id", "left")
-            .where(~F.coalesce(F.col("flagged"), F.lit(False)))
-            .select("doc_id")
+            dec = dec_fut.result()
+            # clean feeds three consumers (its count, the quality
+            # join, and through qual the split agg) and qual two —
+            # uncached, the decontaminate-Bloom chain re-executed 3×
+            # and the classifier scoring 2× per funnel run.  Both
+            # frames are id-only (8 B/row), the same bounded-width
+            # criterion as the round-6 §9 caches; each count right
+            # after the persist materializes it, and both are dropped
+            # before returning.
+            clean = (
+                keep.where(~is_eval)
+                .join(dec, "doc_id", "left")
+                .where(~F.coalesce(F.col("flagged"), F.lit(False)))
+                .select("doc_id")
+                .persist()
+            )
+            cached.append(clean)
+            n_clean = clean.count()
+
+            w = fit_fut.result()
+        pred = classifier.logreg_score(feat, w).select("doc_id", "pred")
+        qual = (
+            clean.join(pred, "doc_id").where("pred = 1").select("doc_id")
             .persist()
         )
-        n_clean = clean.count()
+        cached.append(qual)
+        n_qual = qual.count()
 
-        w = fit_fut.result()
-    pred = classifier.logreg_score(feat, w).select("doc_id", "pred")
-    qual = (
-        clean.join(pred, "doc_id").where("pred = 1").select("doc_id")
-        .persist()
-    )
-    n_qual = qual.count()
-
-    b = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-            16, 10,
-        ).cast("long"),
-        F.lit(100),
-    )
-    splits = {
-        r["s"]: r["n"]
-        for r in qual.select(
-            F.when(b < 90, "train").when(b < 95, "val")
-            .otherwise("test").alias("s")
-        ).groupBy("s").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    clean.unpersist()
-    qual.unpersist()
-    dec.unpersist()
+        b = F.pmod(
+            F.conv(
+                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
+                16, 10,
+            ).cast("long"),
+            F.lit(100),
+        )
+        splits = {
+            r["s"]: r["n"]
+            for r in qual.select(
+                F.when(b < 90, "train").when(b < 95, "val")
+                .otherwise("test").alias("s")
+            ).groupBy("s").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+    finally:
+        for d in cached:
+            d.unpersist()
     rows = [
         ("1_raw", n_raw),
         ("2_dedup_survivors", n_dedup),

@@ -132,7 +132,6 @@ class EngineConfig:
     # already bounded by executor cores and decode must spread across
     # every node.
     decode_parallelism: int | None = None
-    salt_partitions: int = 8     # two-phase fold fan-out for hot keys
     arrow_max_records: int = 65536
     # require dense frame_seq above the watermark per batch — catches
     # out-of-order sources (which would silently lose data under an

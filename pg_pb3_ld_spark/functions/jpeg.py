@@ -152,13 +152,6 @@ class _BitReader:
         self.bitpos = (self.bitpos + 7) & ~7
 
 
-def _extend(v: int, t: int) -> int:
-    """EXTEND per T.81 F.2.2.1: map RECEIVE bits to signed value."""
-    if t == 0:
-        return 0
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
 def decode_jpeg_pixels(blob: bytes) -> np.ndarray:
     """(h, w, ncomp) uint8 pixels.  12-bit streams are decoded at
     native precision and scaled to 8 bits (v >> 4) so every consumer

@@ -306,13 +306,22 @@ def gate_by_commit_watermark(
     everything passes, matching the reference's contract that such
     consumers apply changes as they arrive.
 
-    The watermark is delivered through a broadcast one-row DataFrame,
-    NOT a literal: Catalyst inlines literals into generated Java, so
-    a per-batch literal would force a whole-stage-codegen recompile
-    (multi-second, serial, on the driver) of the entire downstream
-    project/fold/merge plan every micro-batch.  With the value in
-    data, the generated source — and the Janino cache entry — is
-    stable across batches.
+    The watermark is delivered as data — a broadcast one-row
+    ``spark.range(w, w + 1)`` renamed ``_wm`` — NOT a literal:
+    Catalyst inlines literals into generated Java, so a per-batch
+    literal would force a whole-stage-codegen recompile (multi-second,
+    serial, on the driver) of the entire downstream project/fold/merge
+    plan every micro-batch.  ``range(1).select(lit(w))`` is no better:
+    FoldablePropagation carries the aliased literal into the join
+    condition.  With the value in data, the fold stage's generated
+    source — and its Janino cache entry — is stable across batches;
+    only the one-task ``Range`` build stage inlines its bounds.
+
+    The relation is built on the JVM: a Python-built one
+    (``createDataFrame``) would start a Python task per core every
+    batch, each paying pyspark's per-task import-cache reset, while
+    decode is meant to be the only stage that runs Python.  The
+    broadcast costs one single-task Spark job per batch.
     """
     from pg_pb3_ld_spark.operators.fold import ORD_SHIFT
 
@@ -322,8 +331,9 @@ def gate_by_commit_watermark(
     if commit_ord is None:
         return data.where(F.lit(False))  # batch ends mid-transaction
     f, o, _ = commit_ord
-    wm = data.sparkSession.createDataFrame(
-        [((f << ORD_SHIFT) + o,)], "_wm long"
+    w = (f << ORD_SHIFT) + o
+    wm = data.sparkSession.range(w, w + 1, 1, 1).withColumnRenamed(
+        "id", "_wm"
     )
     packed = F.shiftleft(F.col("frame_seq"), ORD_SHIFT) + F.col("offset_idx")
     return (

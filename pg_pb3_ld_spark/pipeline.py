@@ -5,14 +5,23 @@ pass) → persist → commit-watermark gate (D3) → per-key fold (D4,
 map-side combining agg) → COW MERGE + lineage + watermark commit
 (D5/D6) with additive schema evolution (D7)``.
 
-Scale/action budget: the batch runs exactly THREE Spark actions over
-decoded data —
+Scale/action budget: a COW batch runs three actions over decoded
+data, plus the pending-tail write —
 
 1. ``batch_summary_typed``: one agg pass over the typed decode output
    (commit watermark + schema probe) — this action materializes the
    typed persist, so **the frame stream is decoded exactly once**;
 2. fold + per-bucket stats on the folded (persisted, small) output;
-3. the COW MERGE write (row counts via ``observe``, no extra job).
+3. the COW MERGE write (row counts via ``observe``, no extra job);
+4. with ``pending_out``, the held-back tail's parquet write.
+
+Under AQE every shuffle stage and broadcast of an action is a Spark
+job of its own, so the event log counts more jobs than actions: 11
+per batch in the ``trickle_cow`` benchmark trace (``run_stream``,
+COW) — two for the summary, three for the stats (one of them the
+gate watermark's single-task broadcast), four for the merge write,
+one for the pending tail, and one for ``run_stream``'s schema read
+of the carried-over tail.  Only the decode stage runs Python tasks.
 
 Round 1 decoded every frame twice (a light summary pre-scan plus the
 typed pass); at 100 TB that second scan is the largest avoidable cost

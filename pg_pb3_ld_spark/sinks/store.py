@@ -44,10 +44,27 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from pg_pb3_ld_spark.schema import TargetColumn, TargetSchema
 
 MANIFEST = "manifest.json"
+
+
+def _empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """Zero rows with ``ddl``'s columns and types, built on the JVM.
+
+    The optimizer turns the always-false filter into an empty local
+    relation, so the frame runs no task and empty branches fold away;
+    ``createDataFrame([], ddl)`` would start a Python task per core."""
+    return (
+        spark.range(0)
+        .select(*[
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in StructType.fromDDL(ddl).fields
+        ])
+        .where(F.lit(False))
+    )
 
 
 class CommitConflictError(RuntimeError):
@@ -331,7 +348,8 @@ class SnapshotStore:
         }
         key0 = schema.key_columns[0].name
         if not sel:
-            df = self.spark.createDataFrame([], schema.ddl())
+            # no base files: an empty store, or MoR before compaction
+            df = _empty_frame(self.spark, schema.ddl())
         else:
             paths = [os.path.join(self.root, p) for p in sel.values()]
             df = (
@@ -692,7 +710,9 @@ class SnapshotStore:
             # across subs (a conv_id hash would keep them together).
             # The (bucket, n_sub) table rides a broadcast join, not a
             # literal map: per-batch literals in generated code force
-            # serial Janino recompiles.
+            # serial Janino recompiles.  It is built on the JVM (one
+            # row exploded from an array), so only its own tiny build
+            # stage carries the literals and no Python task starts.
             hot_rows = int(self._meta.get("hot_split_rows", 0) or 0)
             lineage_prev = self._meta["lineage"]
             n_sub: dict[int, int] = {}
@@ -709,8 +729,14 @@ class SnapshotStore:
                 )
             if any(v > 1 for v in n_sub.values()):
                 nsub_df = F.broadcast(
-                    self.spark.createDataFrame(
-                        sorted(n_sub.items()), "_bucket int, _nsub int"
+                    self.spark.range(0, 1, 1, 1).select(
+                        F.inline(F.array(*[
+                            F.struct(
+                                F.lit(b).cast("int").alias("_bucket"),
+                                F.lit(n).cast("int").alias("_nsub"),
+                            )
+                            for b, n in sorted(n_sub.items())
+                        ]))
                     )
                 )
                 key_hash = F.xxhash64(*[F.col(k) for k in keys])
@@ -1414,7 +1440,7 @@ class SnapshotStore:
             ]
             parts.append(d.select(*proj))
         if not parts:
-            return self.spark.createDataFrame([], ch_ddl)
+            return _empty_frame(self.spark, ch_ddl)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -82,3 +82,20 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert df.columns == ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+
+def test_funnel_failure_leaves_no_persisted_frame(spark, monkeypatch):
+    """The corpus-build funnel's main thread raising inside its thread
+    pool (a CC that fails to converge) still unpersists the frame the
+    pool's decontamination thread persisted."""
+    from pg_pb3_ld_spark.functions import dedup
+
+    def _boom(*_a, **_k):
+        raise RuntimeError("induced funnel failure")
+
+    monkeypatch.setattr(dedup, "near_dup_clusters", _boom)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="induced funnel failure"):
+        entrymod.q_corpus_build_funnel(spark, SF_DIR)
+    assert set(jsc.getPersistentRDDs().keys()) == before
