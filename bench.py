@@ -322,10 +322,10 @@ def bench_cdc_apply(spark) -> dict:
 
 def bench_skew(spark) -> dict:
     """D8 storm scenario: a stream where ONE conv_id carries ~60% of
-    all change events, applied end-to-end unsalted vs with the
-    explicit two-phase salt (salt=8).  Records timings + the actual
-    key/bucket imbalance so the salt knob's value (or the map-side
-    combine already absorbing the storm) is measured, not asserted."""
+    all change events, applied end-to-end plain vs with the store's
+    hot-bucket sub-split.  Records timings + the actual key/bucket
+    imbalance so the map-side combine absorbing the storm (and the
+    sub-split's write-task bound) is measured, not asserted."""
     from pyspark.sql import functions as F
 
     from pg_pb3_ld_spark.config import EngineConfig
@@ -365,25 +365,23 @@ def bench_skew(spark) -> dict:
     workdir = tempfile.mkdtemp(prefix="pb3ld_storm_")
     try:
         def apply_once(
-            salt: int, rnd: int, hot_split: int = 0
+            rnd: int, hot_split: int = 0
         ) -> tuple[float, SnapshotStore]:
             store = SnapshotStore.create(
-                spark, os.path.join(workdir, f"t{salt}_{hot_split}_{rnd}"),
+                spark, os.path.join(workdir, f"t{hot_split}_{rnd}"),
                 transcripts_schema(), num_buckets=max(CPUS, 8),
                 hot_split_rows=hot_split,
             )
-            pipe = IngestPipeline(spark, store, cfg, salt=salt)
+            pipe = IngestPipeline(spark, store, cfg)
             t0 = time.time()
             pipe.apply_frames(frames, batch_id=1)
             return time.time() - t0, store
 
-        apply_once(0, 99)  # warm
+        apply_once(99)  # warm
         res: dict = {}
         # hot_split threshold chosen so the storm's hot bucket (22k
         # keys vs 3.4k median) splits ~4-way while cold buckets don't
-        for name, salt, hot_split in (
-            ("unsalted", 0, 0), ("salted", 8, 0), ("hot_split", 0, 6000),
-        ):
+        for name, hot_split in (("unsalted", 0), ("hot_split", 6000)):
             raws = []
             store = None
             for rnd in range(2):
@@ -391,7 +389,7 @@ def bench_skew(spark) -> dict:
                 while os.getloadavg()[0] > 2.0 and waited < 120:
                     time.sleep(10)
                     waited += 10
-                el, store = apply_once(salt, rnd, hot_split)
+                el, store = apply_once(rnd, hot_split)
                 raws.append(round(el, 2))
             res[name] = {
                 "best_sec": min(raws),
@@ -526,7 +524,6 @@ def main():
         mor = bench_mor(spark)
         queries = {"cdc_apply": cdc["elapsed_sec"]}
         queries["cdc_apply_storm_unsalted"] = skew["unsalted"]["best_sec"]
-        queries["cdc_apply_storm_salted"] = skew["salted"]["best_sec"]
         queries["cdc_apply_mor_ingest"] = mor["ingest_best_sec"]
         queries["cdc_apply_mor_compact"] = mor["compact_best_sec"]
         queries.update(bench_queries(spark))

@@ -1,19 +1,18 @@
-"""D1 — frame split + protobuf decode as a Spark operator.
+"""D1+D2 — frame split, protobuf decode and typed projection as ONE
+Spark operator.
 
-``decode_changes`` lifts the vectorized codec
-(``pg_pb3_ld_spark.pb3.decoder``) into a ``mapInArrow`` stage: the
-only Python in the whole pipeline.  Input is the raw-ingest DataFrame
-``(frame_seq long, lsn long, frame binary)``; output is the generic
-change DataFrame (FIXTURES.md §2) with the FieldSetDescriptions as
-parallel array columns — the same struct-of-arrays shape the wire
-uses (``decoder/pg_pb3_ld.h:29-40``), so nothing is re-shaped in
-Python.  Everything downstream (typed projection, transaction gating,
-fold, merge) is JVM-side Catalyst work.
+``decode_typed_changes`` lifts the vectorized codec
+(``pg_pb3_ld_spark.pb3.decoder.decode_frame_typed``) into a
+``mapInArrow`` stage: the only Python in the whole pipeline.  Input
+is the raw-ingest DataFrame ``(frame_seq long, lsn long, frame
+binary)``; output is one narrow typed row per message, cast inside the
+same pass.  Everything downstream (commit gate, fold, merge) is
+JVM-side Catalyst work.
 
 Scale notes: one frame ≈ ≤4 MiB (producer flush target,
-``decoder/pg_pb3_ld.c:96-97``); Arrow batches are kept to
-``arrow_batch_frames`` frames so executor memory stays bounded
-regardless of upstream batch sizing.
+``decoder/pg_pb3_ld.c:96-97``); each Arrow batch is decoded in slices
+of at most ``ARROW_BATCH_BYTES`` wire bytes so executor memory stays
+bounded regardless of upstream batch sizing.
 """
 
 from __future__ import annotations
@@ -26,7 +25,10 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from pg_pb3_ld_spark.config import EngineConfig
-from pg_pb3_ld_spark.pb3.decoder import decode_frame_arrow
+
+# Wire bytes per decode slice: one ``decode_frame_typed`` call sees at
+# most this much of an Arrow batch (frames are never split).
+ARROW_BATCH_BYTES = 64 * 1024 * 1024
 
 # Target SOURCE bytes per decode task for the adaptive repartition
 # (the size estimate sees compressed parquet, ~3-4x smaller than the
@@ -57,89 +59,10 @@ def _adaptive_parallelism(frames_df: DataFrame, parallelism: int) -> int:
     )
 
 
-GENERIC_CHANGE_DDL = (
-    "frame_seq long, lsn long, offset_idx int, op string, "
-    "schema_name string, table_name string, table_oid long, "
-    "key_names array<string>, key_values array<binary>, "
-    "key_nulls array<boolean>, key_oids array<long>, "
-    "key_formats array<boolean>, "
-    "new_names array<string>, new_values array<binary>, "
-    "new_nulls array<boolean>, new_oids array<long>, "
-    "new_formats array<boolean>"
-)
-
-
-def decode_changes(
-    frames_df: DataFrame,
-    config: EngineConfig | None = None,
-    target_batch_bytes: int = 64 * 1024 * 1024,
-    parallelism: int | None = None,
-) -> DataFrame:
-    """Raw frames DataFrame → generic change DataFrame (vectorized).
-
-    ``parallelism``: frames land in few large files (one walsender
-    stream), so a raw scan yields only bytes/128 MiB partitions — far
-    under the core count.  A cheap round-robin repartition of the
-    (small, compressed) frame rows spreads the Python decode across
-    the cluster; downstream shuffles re-key anyway, so no ordering is
-    lost (ordering lives in (frame_seq, offset_idx), not partition
-    layout).
-    """
-    cfg = config or EngineConfig()
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            seqs = batch.column("frame_seq").to_numpy(zero_copy_only=False)
-            lsns = batch.column("lsn").to_numpy(zero_copy_only=False)
-            frames = batch.column("frame")
-            # sub-chunk by cumulative frame bytes so one decode pass
-            # stays cache-friendly and bounded regardless of upstream
-            # batch sizing (frames are ≤~4 MiB each)
-            sizes = np.diff(
-                np.frombuffer(
-                    frames.buffers()[1],
-                    dtype=np.int64 if pa.types.is_large_binary(frames.type) else np.int32,
-                    count=n + 1 + frames.offset,
-                )[frames.offset:].astype(np.int64)
-            )
-            cuts = [0]
-            acc = 0
-            for i, s in enumerate(sizes):
-                acc += int(s)
-                if acc >= target_batch_bytes:
-                    cuts.append(i + 1)
-                    acc = 0
-            if cuts[-1] != n:
-                cuts.append(n)
-            for lo, hi in zip(cuts[:-1], cuts[1:]):
-                if hi <= lo:
-                    continue
-                out = decode_frame_arrow(
-                    frames.slice(lo, hi - lo),
-                    lsns[lo:hi].astype(np.int64),
-                    seqs[lo:hi].astype(np.int64),
-                    cfg,
-                )
-                if out.num_rows:
-                    yield out
-
-    if parallelism:
-        par = _adaptive_parallelism(frames_df, parallelism)
-        if par > 1:
-            frames_df = frames_df.repartition(par)
-        else:
-            frames_df = frames_df.coalesce(1)
-    return frames_df.mapInArrow(fn, GENERIC_CHANGE_DDL)
-
-
 def decode_typed_changes(
     frames_df: DataFrame,
     schema,
     config: EngineConfig | None = None,
-    target_batch_bytes: int = 64 * 1024 * 1024,
     parallelism: int | None = None,
     quarantine: bool = False,
 ) -> DataFrame:
@@ -153,6 +76,14 @@ def decode_typed_changes(
     carries columns outside ``schema``) let the pipeline derive the
     commit watermark AND the schema-evolution probe from this one
     stage — the frame stream is decoded exactly once per batch.
+
+    ``parallelism``: frames land in few large files (one walsender
+    stream), so a raw scan yields only bytes/128 MiB partitions — far
+    under the core count.  A cheap round-robin repartition of the
+    (small, compressed) frame rows spreads the Python decode across
+    the cluster, sized from the input bytes; downstream shuffles
+    re-key anyway, so no ordering is lost (ordering lives in
+    (frame_seq, offset_idx), not partition layout).
 
     ``quarantine=True`` (dead-letter mode): a frame that fails the
     wire parse no longer kills the job — the batch decode is retried
@@ -256,7 +187,7 @@ def decode_typed_changes(
             acc = 0
             for i, s in enumerate(sizes):
                 acc += int(s)
-                if acc >= target_batch_bytes:
+                if acc >= ARROW_BATCH_BYTES:
                     cuts.append(i + 1)
                     acc = 0
             if cuts[-1] != n:

@@ -19,10 +19,9 @@ the per-key change sequence into ONE merge action:
 
 Everything is ``max(struct(ord, …))`` aggregation — associative and
 commutative, so Spark's hash aggregate does map-side partial
-combining, which is also the skew story: a hot key's millions of
-events collapse to one partial per map task before the shuffle
-(plus optional explicit two-phase salting for pathological storms —
-D8, ``fold_changes(salt=N)``).
+combining, which is also the skew story (D8): a hot key's millions of
+events collapse to one partial per map task before the shuffle, and
+AQE coalesces the post-shuffle partitions.
 """
 
 from __future__ import annotations
@@ -31,8 +30,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from pg_pb3_ld_spark.pb3 import wire
 from pg_pb3_ld_spark.schema import TargetSchema
-
-ORD = ("frame_seq", "offset_idx")
 
 # WAL order packed into ONE long: (frame_seq << SHIFT | offset_idx) is
 # totally ordered and makes every fold aggregate compare a flat int64
@@ -46,24 +43,17 @@ def _ord() -> F.Column:
     return F.shiftleft(F.col("frame_seq"), ORD_SHIFT) + F.col("offset_idx")
 
 
-def fold_changes(
-    typed: DataFrame, schema: TargetSchema, salt: int = 0
-) -> DataFrame:
+def fold_changes(typed: DataFrame, schema: TargetSchema) -> DataFrame:
     """Collapse typed change rows to one action per key.
 
     Output: key columns, ``kind`` (DELETE/REPLACE/PATCH), per value
     column ``<c>`` and ``<c>_set``, plus lineage columns ``last_lsn``,
     ``last_frame_seq``, ``n_changes``.
-
-    ``salt > 1`` forces an explicit two-phase aggregation (partial per
-    salt bucket, then final) — normally unnecessary because hash-agg
-    partials already combine map-side, but exposed for storm testing
-    and as an explicit knob at 10^10-event scale.
     """
     keys = [c.name for c in schema.key_columns]
     vals = [c.name for c in schema.value_columns]
 
-    partial_aggs = [
+    aggs = [
         # plain long max, not max(struct(ord, op)): ord is unique per
         # change so the max row is the same, and only the ord itself
         # is ever consumed (last_frame_seq) — the op field was dead
@@ -79,7 +69,7 @@ def fold_changes(
         F.count(F.lit(1)).alias("n_changes"),
     ]
     for c in vals:
-        partial_aggs.append(
+        aggs.append(
             F.max(
                 F.when(
                     F.col(f"{c}_set"),
@@ -88,20 +78,7 @@ def fold_changes(
             ).alias(f"_lv_{c}")
         )
 
-    if salt > 1:
-        salted = typed.withColumn(
-            "_salt", F.pmod(F.xxhash64(*ORD), F.lit(salt))
-        )
-        partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
-        recombine = [
-            F.max("_last_ord").alias("_last_ord"),
-            F.max("_barrier").alias("_barrier"),
-            F.max("_last_lsn").alias("_last_lsn"),
-            F.sum("n_changes").alias("n_changes"),
-        ] + [F.max(f"_lv_{c}").alias(f"_lv_{c}") for c in vals]
-        agg = partial.groupBy(*keys).agg(*recombine)
-    else:
-        agg = typed.groupBy(*keys).agg(*partial_aggs)
+    agg = typed.groupBy(*keys).agg(*aggs)
 
     barrier = F.col("_barrier")
     barrier_ord = barrier.getField("o")

@@ -1,23 +1,21 @@
-"""D2 — typed projection of the generic change stream (pure JVM).
+"""D2/D7 — JVM projection of raw wire values held in the probe.
 
-Turns the generic parallel-array change DataFrame into typed
-transcript-change rows entirely with built-in expressions — no Python
-after the decode stage, so Catalyst/whole-stage-codegen owns the hot
-path.  Per target column we look its name up in the wire field set
-(``array_position``), honoring the three semantics the reference
-forces on consumers:
+The fused decode (``operators.decode``) casts every column of the
+schema it was given.  Wire columns outside that schema — added by an
+``ALTER TABLE`` mid-stream, or re-sent with a wider type oid — ride
+the ``_x_*`` probe arrays as raw bytes.  After schema evolution the
+pipeline derives those columns here with built-in expressions over
+the persisted typed rows, so an evolution batch costs no second
+decode.  Per column we look its name up in the probe field set
+(``array_position``), honoring the semantics the reference forces on
+consumers:
 
 * **absent ≠ NULL** (TOAST omission, ``decoder/fsd.c:163-175``):
   ``<col>_set`` distinguishes "column not on the wire" from an
   explicit NULL in the nulls bitmap;
 * **text vs binary value form per column** (``fsd.c:150-199``):
-  binary int4/int8/timestamptz are decoded with hex/conv arithmetic,
-  text forms with plain casts;
-* **key extraction** (``fsd_populate_via_index``, ``fsd.c:82-113``):
-  UPDATE/DELETE keys come from ``key_fields``; with REPLICA IDENTITY
-  FULL the key field set is the whole old row, which the name lookup
-  handles for free.  INSERT keys come from ``new_values``
-  (``pg_pb3_ld.c:340-356`` inserts carry no key fields).
+  binary int2/int4/int8/timestamptz are decoded with hex/conv
+  arithmetic, text forms with plain casts.
 """
 
 from __future__ import annotations
@@ -25,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from pg_pb3_ld_spark.pb3.pgtypes import PG_EPOCH_US
-from pg_pb3_ld_spark.schema import TargetSchema
 
 
 def _lookup(prefix: str, name: str) -> dict[str, Column]:
@@ -106,42 +103,6 @@ def typed_column(lk: dict[str, Column], spark_type: str) -> Column:
     return F.when(nonnull, out)
 
 
-def project_typed(changes: DataFrame, schema: TargetSchema) -> DataFrame:
-    """Generic change rows → typed change rows for one target table.
-
-    Output: ordering/txn columns, ``op``, typed key columns, and per
-    value column ``<c>`` (typed, NULL when absent or explicit NULL)
-    plus ``<c>_set`` (column present on the wire).  BEGIN/COMMIT rows
-    are dropped here — gate transactions *before* this projection.
-    """
-    df = changes.where(
-        F.col("op").isin("INSERT", "UPDATE", "DELETE")
-        & (F.col("table_name") == schema.table)
-    )
-    cols = [
-        F.col("frame_seq"),
-        F.col("lsn"),
-        F.col("offset_idx"),
-        F.col("op"),
-    ]
-    if "txn_id" in changes.columns:
-        cols.append(F.col("txn_id"))
-    for kc in schema.key_columns:
-        new_lk = _lookup("new", kc.name)
-        key_lk = _lookup("key", kc.name)
-        # key_fields when provided (U/D), else the full-row projection
-        cols.append(
-            F.when(key_lk["present"], typed_column(key_lk, kc.spark_type))
-            .otherwise(typed_column(new_lk, kc.spark_type))
-            .alias(kc.name)
-        )
-    for vc in schema.value_columns:
-        lk = _lookup("new", vc.name)
-        cols.append(typed_column(lk, vc.spark_type).alias(vc.name))
-        cols.append(lk["present"].alias(f"{vc.name}_set"))
-    return df.select(*cols)
-
-
 def project_evolved_from_probe(
     typed: DataFrame, new_cols: list
 ) -> DataFrame:
@@ -155,18 +116,10 @@ def project_evolved_from_probe(
     (``can_project_from_probe``).
     """
     for c in new_cols:
-        pos = F.array_position(F.col("_x_names"), c.name)
-        present = pos > 0
-        ipos = pos.cast("int")
-        lk = {
-            "present": present,
-            "value": F.when(present, F.element_at("_x_values", ipos)),
-            "is_null": F.when(present, F.element_at("_x_nulls", ipos)),
-            "is_bin": F.when(present, F.element_at("_x_formats", ipos)),
-        }
+        lk = _lookup("_x", c.name)
         typed = typed.withColumn(
             c.name, typed_column(lk, c.spark_type)
-        ).withColumn(f"{c.name}_set", present)
+        ).withColumn(f"{c.name}_set", lk["present"])
     return typed
 
 
@@ -180,15 +133,8 @@ def project_widened_from_probe(
     preserving absent≠NULL: a probe row with an explicit NULL is set,
     a row where the column never appeared stays unset."""
     for c in widened_cols:
-        pos = F.array_position(F.col("_x_names"), c.name)
-        present = pos > 0
-        ipos = pos.cast("int")
-        lk = {
-            "present": present,
-            "value": F.when(present, F.element_at("_x_values", ipos)),
-            "is_null": F.when(present, F.element_at("_x_nulls", ipos)),
-            "is_bin": F.when(present, F.element_at("_x_formats", ipos)),
-        }
+        lk = _lookup("_x", c.name)
+        present = lk["present"]
         probe_val = typed_column(lk, c.spark_type)
         typed = typed.withColumn(
             c.name,
@@ -211,24 +157,3 @@ def can_project_from_probe(new_cols: list, config) -> bool:
         and config.binary_output_for(c.type_oid)
         for c in new_cols
     )
-
-
-def observed_wire_columns(changes: DataFrame) -> list[tuple[str, int]]:
-    """Distinct (name, type_oid) pairs seen in new_values — the D7
-    schema-evolution probe.  Cheap: map-side explode + partial agg of
-    a tiny distinct set."""
-    rows = (
-        changes.select(
-            F.explode(
-                F.arrays_zip(
-                    F.col("new_names").alias("name"),
-                    F.col("new_oids").alias("oid"),
-                )
-            ).alias("c")
-        )
-        .select(F.col("c.name").alias("name"), F.col("c.oid").alias("oid"))
-        .groupBy("name")
-        .agg(F.max("oid").alias("oid"))
-        .collect()
-    )
-    return [(r["name"], int(r["oid"])) for r in rows]

@@ -1,168 +1,27 @@
-"""D3 — transaction assembly and commit gating, shuffle-light.
+"""D3 — commit gating by a scalar commit watermark.
 
 The wire stream demarcates transactions with BEGIN/COMMIT marker
 messages (``decoder/pg_pb3_ld.c:230-272``); a transaction may span
 many frames (mid-txn flush at the 4 MiB target,
 ``pg_pb3_ld.c:417-422``) but a frame never spans a commit.  The
-consumer must assign every change to a transaction and apply only
-changes whose COMMIT has arrived (the reference applies callbacks at
-commit time — PG's reorder buffer guarantees it producer-side; a
-resumable consumer must re-check on its side of the transport).
+consumer must apply only changes whose COMMIT has arrived (the
+reference applies callbacks at commit time — PG's reorder buffer
+guarantees it producer-side; a resumable consumer must re-check on
+its side of the transport).
 
-``txn_id`` = global running count of BEGIN messages at-or-before the
-change, in ``(frame_seq, offset_idx)`` order.  A naive global window
-would serialize onto one task; instead we do the classic two-level
-scan, which survives any frame count:
-
-1. per-*chunk* BEGIN counts (chunk = ``frame_seq >> chunk_shift``;
-   map-side partial agg, tiny shuffle) — the driver sees
-   O(#frames / 2^shift) longs, never row-level data;
-2. ordered prefix sum over chunk counts on the driver;
-3. broadcast the chunk bases back, then a window partitioned **by
-   chunk** (parallel; bounded rows per chunk since one 4 MiB frame
-   holds a bounded message count) adds the intra-chunk running count.
+The producer's flush discipline makes that a scalar comparison, not a
+per-change transaction id: COMMIT always flushes the frame
+(``pg_pb3_ld.c:266-271``) and transactions are emitted serially in
+commit order, so *every change ordered before the last COMMIT of the
+batch is committed*.  ``batch_summary_typed`` finds that commit
+ordinate in the batch pre-scan (one aggregation, map-side combined);
+``gate_by_commit_watermark`` keeps the changes below it and holds the
+uncommitted tail back for the next micro-batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
-
-
-MAX_DRIVER_CHUNKS = 4096
-
-
-def _adaptive_shift(
-    min_f: int, max_f: int, chunk_shift: int, cap: int = MAX_DRIVER_CHUNKS
-) -> int:
-    """Smallest shift ≥ ``chunk_shift`` keeping the chunk count (and
-    therefore the driver-collected prefix-sum rows) ≤ ``cap`` for the
-    observed frame_seq range — O(log range) iterations.
-
-    Chunks are ``frame_seq >> shift`` on UNALIGNED values, so the
-    distinct-chunk count is ``(max>>shift) - (min>>shift) + 1`` — one
-    more than ``((max-min)>>shift)+1`` when the range straddles an
-    extra chunk boundary; bound the real quantity so the driver
-    collect is exactly capped."""
-    shift = chunk_shift
-    while ((max_f >> shift) - (min_f >> shift)) + 1 > cap:
-        shift += 1
-    return shift
-
-
-def assign_txn_ids(changes: DataFrame, chunk_shift: int = 8) -> DataFrame:
-    """Add ``txn_id`` (cumulative BEGIN count) to every message row.
-
-    Falls back to ``txn_id = NULL`` for streams produced with
-    ``begin_messages=false`` (pg_pb3_ld.c:127-132) — gating is then a
-    no-op and every change applies.
-
-    ``chunk_shift`` is a floor, not the operative value: the shift is
-    raised adaptively so the driver never collects more than
-    ``MAX_DRIVER_CHUNKS`` prefix-sum rows regardless of frame count
-    (at 10^10-event batches a fixed shift of 8 would collect ~40M
-    driver rows; adaptively it stays ≤4096 longs, and each chunk's
-    intra-chunk window stays an independent parallel task).  This is
-    the FALLBACK gating path — the hot path is the scalar
-    commit-watermark gate (see ``batch_summary``)."""
-    spark = changes.sparkSession
-    is_begin = F.when(F.col("op") == "BEGIN", 1).otherwise(0)
-    bounds = changes.agg(
-        F.min("frame_seq").alias("lo"), F.max("frame_seq").alias("hi")
-    ).collect()[0]
-    if bounds["lo"] is None:
-        return changes.withColumn("txn_id", F.lit(None).cast("long"))
-    chunk_shift = _adaptive_shift(
-        int(bounds["lo"]), int(bounds["hi"]), chunk_shift
-    )
-    chunk = F.shiftright(F.col("frame_seq"), chunk_shift)
-    per_chunk = (
-        changes.groupBy(chunk.alias("chunk"))
-        .agg(F.sum(is_begin).alias("n_begin"))
-        .collect()
-    )
-    if not per_chunk or all(r["n_begin"] == 0 for r in per_chunk):
-        return changes.withColumn("txn_id", F.lit(None).cast("long"))
-    per_chunk.sort(key=lambda r: r["chunk"])
-    base = 0
-    rows = []
-    for r in per_chunk:
-        rows.append((r["chunk"], base))
-        base += r["n_begin"]
-    base_df = spark.createDataFrame(rows, "chunk long, txn_base long")
-    w = (
-        Window.partitionBy("chunk")
-        .orderBy("frame_seq", "offset_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        changes.withColumn("chunk", chunk)
-        .join(F.broadcast(base_df), "chunk", "left")
-        .withColumn("txn_id", F.col("txn_base") + F.sum(is_begin).over(w))
-        .drop("chunk", "txn_base")
-    )
-
-
-def batch_summary(decoded: DataFrame) -> dict:
-    """One-pass batch pre-scan: commit watermark + observed schema.
-
-    Exploits the producer's flush discipline: COMMIT always flushes
-    the frame (``pg_pb3_ld.c:266-271``) and PG's reorder buffer emits
-    transactions serially in commit order, so *every change message
-    ordered before the last COMMIT of the batch is committed* — commit
-    gating reduces to a scalar watermark instead of a txn-id join.
-
-    Returns ``{commit_ord: (frame_seq, offset_idx, lsn) | None,
-    names: [(name, oid)], max_lsn, max_frame_seq, n_commits}`` from a
-    single aggregation job (schema-evolution probe rides along via
-    ``explode_outer``, which keeps BEGIN/COMMIT rows as null-name
-    groups).
-    """
-    # group by the *whole name array*: a CDC stream has only a handful
-    # of distinct column-list shapes, so this aggregates 100%
-    # map-side into a few groups — no explode, no per-name rows
-    rows = (
-        decoded.groupBy("new_names")
-        .agg(
-            F.max("new_oids").alias("oids"),
-            F.max(
-                F.when(
-                    F.col("op") == "COMMIT",
-                    F.struct("frame_seq", "offset_idx", "lsn"),
-                )
-            ).alias("cord"),
-            F.sum(F.when(F.col("op") == "COMMIT", 1).otherwise(0)).alias("nc"),
-            F.max("lsn").alias("max_lsn"),
-            F.max("frame_seq").alias("max_f"),
-        )
-        .collect()
-    )
-    commit_ord = None
-    seen: dict[str, int] = {}
-    max_lsn = -1
-    max_f = -1
-    n_commits = 0
-    for r in rows:
-        for name, oid in zip(r["new_names"] or [], r["oids"] or []):
-            if oid or name not in seen:
-                seen[name] = max(int(oid), seen.get(name, 0))
-        if r["cord"] is not None:
-            co = (
-                r["cord"]["frame_seq"],
-                r["cord"]["offset_idx"],
-                r["cord"]["lsn"],
-            )
-            if commit_ord is None or co > commit_ord:
-                commit_ord = co
-        n_commits += int(r["nc"])
-        max_lsn = max(max_lsn, r["max_lsn"] if r["max_lsn"] is not None else -1)
-        max_f = max(max_f, r["max_f"] if r["max_f"] is not None else -1)
-    return {
-        "commit_ord": commit_ord,
-        "names": list(seen.items()),
-        "max_lsn": max_lsn,
-        "max_frame_seq": max_f,
-        "n_commits": n_commits,
-    }
+from pyspark.sql import DataFrame, functions as F
 
 
 def summary_agg_df(typed: DataFrame) -> DataFrame:
@@ -221,11 +80,16 @@ def summary_agg_df(typed: DataFrame) -> DataFrame:
 def batch_summary_typed(typed: DataFrame) -> dict:
     """Batch pre-scan over the TYPED decode output (single-pass plan).
 
-    Same contract as ``batch_summary`` but reads the commit watermark
-    and schema-evolution probe off ``decode_typed_changes``'s columns
-    (``_x_names``/``_x_oids`` carry only the UNKNOWN wire columns, so
-    the frame stream is decoded once per batch — the pipeline persists
-    the typed rows and this aggregation materializes the cache).
+    Reads the commit watermark and schema-evolution probe off
+    ``decode_typed_changes``'s columns (``_x_names``/``_x_oids`` carry
+    only the UNKNOWN wire columns, so the frame stream is decoded once
+    per batch — the pipeline persists the typed rows and this
+    aggregation materializes the cache).
+
+    Returns ``{commit_ord: (frame_seq, offset_idx, lsn) | None,
+    names: [(name, oid)], names_by_table: {table: [(name, oid)]},
+    max_lsn, max_frame_seq, min_frame_seq, n_frames, n_commits}`` from
+    a single aggregation job.
 
     Plan shape: the commit ordinate is packed into ONE long and the
     probe is exploded to (name, oid) pairs, so every aggregation
@@ -300,8 +164,8 @@ def batch_summary_typed(typed: DataFrame) -> dict:
 def gate_by_commit_watermark(
     decoded: DataFrame, commit_ord: tuple | None, has_commits: bool
 ) -> DataFrame:
-    """Keep change messages at-or-before the last COMMIT (see
-    ``batch_summary``).  Streams without commit markers
+    """Keep change messages ordered before the last COMMIT (see the
+    module docstring).  Streams without commit markers
     (``commit_messages=false``, pg_pb3_ld.c:133-138) can't be gated —
     everything passes, matching the reference's contract that such
     consumers apply changes as they arrive.
@@ -341,29 +205,3 @@ def gate_by_commit_watermark(
         .where(packed < F.col("_wm"))
         .drop("_wm")
     )
-
-
-def gate_committed(changes_with_txn: DataFrame) -> DataFrame:
-    """Keep only changes belonging to committed transactions (T2).
-
-    A COMMIT row shares the txn_id of its transaction (it follows the
-    changes, before the next BEGIN).  Changes in transactions without
-    a COMMIT in this batch are held back — the streaming runner keeps
-    re-reading them with the next micro-batch; the reference's
-    commit-time callback ordering makes an uncommitted tail only
-    possible at the very end of a batch.  Streams without BEGIN
-    markers (txn_id NULL) pass through ungated.
-    """
-    committed = (
-        changes_with_txn.where(F.col("op") == "COMMIT")
-        .select("txn_id")
-        .distinct()
-    )
-    data = changes_with_txn.where(
-        F.col("op").isin("INSERT", "UPDATE", "DELETE")
-    )
-    gated = data.where(F.col("txn_id").isNotNull()).join(
-        committed, "txn_id", "left_semi"
-    )
-    ungated = data.where(F.col("txn_id").isNull())
-    return gated.unionByName(ungated)

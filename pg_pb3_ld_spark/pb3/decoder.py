@@ -477,33 +477,6 @@ def decode_frames(
     )
 
 
-def decode_frame_arrow(
-    frame_col: pa.Array,
-    lsns: np.ndarray,
-    frame_seqs: np.ndarray,
-    config: EngineConfig | None = None,
-) -> pa.RecordBatch:
-    """Zero-copy entry: decode directly from an Arrow binary column's
-    (offsets, data) buffers — the ``mapInArrow`` hot path."""
-    if isinstance(frame_col, pa.ChunkedArray):
-        frame_col = frame_col.combine_chunks()
-    n = len(frame_col)
-    if n == 0:
-        return pa.RecordBatch.from_pylist([], schema=GENERIC_ARROW_SCHEMA)
-    if frame_col.null_count:
-        raise WireFormatError("null frame in input")
-    buffers = frame_col.buffers()
-    width = 8 if pa.types.is_large_binary(frame_col.type) else 4
-    odt = np.int64 if width == 8 else np.int32
-    offsets = np.frombuffer(
-        buffers[1], dtype=odt, count=n + 1 + frame_col.offset
-    )[frame_col.offset:].astype(np.int64)
-    data = np.frombuffer(buffers[2], dtype=np.uint8)
-    return decode_frame_buffer(
-        data, offsets[:-1], offsets[1:], lsns, frame_seqs, config
-    )
-
-
 @dataclass
 class DecodedCore:
     """Steps 1-6 of the decode: everything both finishers need."""

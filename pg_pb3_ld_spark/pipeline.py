@@ -65,14 +65,68 @@ from pg_pb3_ld_spark.sinks.store import SnapshotStore
 PROBE_COLS = ("_x_names", "_x_oids", "_x_values", "_x_nulls", "_x_formats")
 
 
+def _check_frame_order(summary: dict, hwm_frame: int) -> None:
+    """Transport-order guard.  The LSN watermark is only sound if the
+    source hands frames over in order (the reference's replication
+    stream guarantees it; Kafka per partition and a name-ordered
+    landing zone do too).  Spark's file source orders by modification
+    time with ties broken arbitrarily — if a batch skips frames, later
+    frames would silently land below the advanced watermark and be
+    dropped as replays.  Fail fast instead: above-watermark frame_seqs
+    must be dense and start right after ``hwm_frame``.  The evidence
+    rides the summary aggregation (one first-message row per decoded
+    frame), so the check costs no extra Spark action; it runs before
+    anything is applied, preserving the watermark's soundness."""
+    if not summary["n_frames"]:
+        return
+    lo, hi = summary["min_frame_seq"], summary["max_frame_seq"]
+    if summary["n_frames"] != hi - lo + 1:
+        raise RuntimeError(
+            "out-of-order frame delivery: batch covers "
+            f"frame_seq [{lo}, {hi}] but holds only "
+            f"{summary['n_frames']} frames — the source must "
+            "deliver frames in LSN order (fix the "
+            "landing-zone ordering or disable "
+            "config.strict_frame_order)"
+        )
+    # watermark CONTINUITY: intra-batch density alone misses a resume
+    # that skips frames between the applied watermark and the batch
+    # start — e.g. a Kafka consumer that committed the DELIVERED
+    # offset instead of the watermark-derived one, losing the
+    # held-back mid-transaction tail across a rebalance
+    if hwm_frame >= 0 and lo != hwm_frame + 1:
+        raise RuntimeError(
+            "out-of-order frame delivery: resume gap — the "
+            f"applied watermark is frame_seq {hwm_frame} "
+            f"but the batch starts at {lo}; frames in between "
+            "were never delivered (commit source offsets "
+            "from the applied watermark, not the delivered "
+            "position)"
+        )
+
+
+def _write_pending(
+    fresh: DataFrame, wm_frame: int, pending_out: str, name: str
+) -> int:
+    """Write the frames above ``wm_frame`` (the uncommitted tail) to
+    ``pending_out`` for the next micro-batch; returns their count,
+    observed on the write itself (no extra Spark action)."""
+    from pyspark.sql import Observation
+
+    obs = Observation(name)
+    pending = fresh.where(F.col("frame_seq") > wm_frame).observe(
+        obs, F.count(F.lit(1)).alias("n")
+    )
+    pending.write.mode("overwrite").parquet(pending_out)
+    return int(obs.get["n"])
+
+
 @dataclass
 class IngestPipeline:
     spark: SparkSession
     store: SnapshotStore
     config: EngineConfig = field(default_factory=EngineConfig)
-    salt: int = 0                  # D8 explicit two-phase fold knob
     evolve_schema: bool = True     # D7
-    profile: bool = False          # stamp per-phase wall times
     # "cow": classic copy-on-write MERGE (read+join+rewrite touched
     # buckets).  "mor": merge-on-read delta commits — write cost
     # proportional to the BATCH, reads resolve the delta log, and
@@ -110,8 +164,6 @@ class IngestPipeline:
         ``pending_out``: directory to write held-back frames (the
         uncommitted tail) as parquet for the next micro-batch.
         """
-        import time as _time
-
         if self.apply_mode not in ("cow", "mor"):
             raise ValueError(
                 f"apply_mode must be 'cow' or 'mor', got "
@@ -127,7 +179,6 @@ class IngestPipeline:
             self.config.decode_parallelism
             or self.spark.sparkContext.defaultParallelism
         )
-        times: dict[str, float] = {}
         schema = self.store.schema
 
         # single-pass decode: typed rows persisted, summary agg
@@ -149,53 +200,9 @@ class IngestPipeline:
                 if n_quarantined:
                     bad.write.mode("append").parquet(self.quarantine_dir)
                 typed_all = typed_all.drop("_err", "_raw")
-            t0 = _time.time()
             summary = batch_summary_typed(typed_all)
-            times["summary"] = _time.time() - t0
-
-            # Transport-order guard.  The LSN watermark is only sound
-            # if the source hands frames over in order (the reference's
-            # replication stream guarantees it; Kafka per partition and
-            # a name-ordered landing zone do too).  Spark's file source
-            # orders by modification time with ties broken arbitrarily —
-            # if a batch skips frames, later frames would silently land
-            # below the advanced watermark and be dropped as replays.
-            # Fail fast instead: above-watermark frame_seqs must be
-            # dense.  The evidence rides the summary aggregation (one
-            # first-message row per decoded frame), so the check costs
-            # no extra Spark action; it runs before anything is
-            # applied, preserving the watermark's soundness.
-            if self.config.strict_frame_order and summary["n_frames"]:
-                span = summary["max_frame_seq"] - summary["min_frame_seq"] + 1
-                if summary["n_frames"] != span:
-                    raise RuntimeError(
-                        "out-of-order frame delivery: batch covers "
-                        f"frame_seq [{summary['min_frame_seq']}, "
-                        f"{summary['max_frame_seq']}] but holds only "
-                        f"{summary['n_frames']} frames — the source must "
-                        "deliver frames in LSN order (fix the "
-                        "landing-zone ordering or disable "
-                        "config.strict_frame_order)"
-                    )
-                # watermark CONTINUITY: intra-batch density alone
-                # misses a resume that skips frames between the
-                # applied watermark and the batch start — e.g. a Kafka
-                # consumer that committed the DELIVERED offset instead
-                # of the watermark-derived one, losing the held-back
-                # mid-transaction tail across a rebalance
-                if (
-                    hwm_frame >= 0
-                    and summary["min_frame_seq"] != hwm_frame + 1
-                ):
-                    raise RuntimeError(
-                        "out-of-order frame delivery: resume gap — the "
-                        f"applied watermark is frame_seq {hwm_frame} "
-                        f"but the batch starts at "
-                        f"{summary['min_frame_seq']}; frames in between "
-                        "were never delivered (commit source offsets "
-                        "from the applied watermark, not the delivered "
-                        "position)"
-                    )
+            if self.config.strict_frame_order:
+                _check_frame_order(summary, hwm_frame)
 
             data = typed_all.where(F.col("table_name") == schema.table)
             # evolution reads the PER-TABLE probe: an untracked table's
@@ -276,7 +283,7 @@ class IngestPipeline:
             gated = gate_by_commit_watermark(
                 data, commit_ord, has_commits=self.config.commit_messages
             )
-            folded = fold_changes(gated, schema, salt=self.salt)
+            folded = fold_changes(gated, schema)
 
             # the applied watermark is the commit point, not the batch
             # max — held-back frames must stay above the hwm so they
@@ -285,7 +292,6 @@ class IngestPipeline:
             if self.config.commit_messages and commit_ord is not None:
                 batch_hwm = (commit_ord[2], commit_ord[0])
 
-            t0 = _time.time()
             if self.config.commit_messages and commit_ord is None:
                 # batch ended mid-transaction: nothing committed
                 metrics = {"applied_keys": 0, "applied_changes": 0,
@@ -308,30 +314,19 @@ class IngestPipeline:
                         min_deltas=self.compact_min_deltas
                     )
                     metrics["compaction"] = c
-            times["merge"] = _time.time() - t0
         finally:
             typed_all.unpersist()
 
         # hold back the uncommitted tail for the next micro-batch
         n_pending = 0
         if pending_out is not None and self.config.commit_messages:
-            from pyspark.sql import Observation
-
-            wm_frame = commit_ord[0] if commit_ord else hwm_frame
-            obs = Observation(f"pending_{batch_id}")
-            pending = fresh.where(F.col("frame_seq") > wm_frame).observe(
-                obs, F.count(F.lit(1)).alias("n")
+            n_pending = _write_pending(
+                fresh, commit_ord[0] if commit_ord else hwm_frame,
+                pending_out, f"pending_{batch_id}",
             )
-            t0 = _time.time()
-            pending.write.mode("overwrite").parquet(pending_out)
-            n_pending = int(obs.get["n"])
-            times["pending"] = _time.time() - t0
         metrics["pending_frames"] = n_pending
         if self.quarantine_dir:
             metrics["quarantined_frames"] = n_quarantined
-
-        if self.profile:
-            metrics["phase_sec"] = {k: round(v, 2) for k, v in times.items()}
         return metrics
 
 
@@ -363,7 +358,6 @@ class MultiTablePipeline:
     spark: SparkSession
     stores: dict[str, SnapshotStore]
     config: EngineConfig = field(default_factory=EngineConfig)
-    salt: int = 0
     evolve_schema: bool = True
 
     def apply_frames(
@@ -402,28 +396,8 @@ class MultiTablePipeline:
         metrics: dict = {"tables": {}}
         try:
             summary = batch_summary_typed(typed_all)
-            if self.config.strict_frame_order and summary["n_frames"]:
-                span = summary["max_frame_seq"] - summary["min_frame_seq"] + 1
-                if summary["n_frames"] != span:
-                    raise RuntimeError(
-                        "out-of-order frame delivery: batch covers "
-                        f"frame_seq [{summary['min_frame_seq']}, "
-                        f"{summary['max_frame_seq']}] but holds only "
-                        f"{summary['n_frames']} frames — fix the "
-                        "landing-zone ordering or disable "
-                        "config.strict_frame_order"
-                    )
-                if (
-                    lo_frame >= 0
-                    and summary["min_frame_seq"] != lo_frame + 1
-                ):
-                    raise RuntimeError(
-                        "out-of-order frame delivery: resume gap — the "
-                        f"minimum applied watermark is frame_seq "
-                        f"{lo_frame} but the batch starts at "
-                        f"{summary['min_frame_seq']}; frames in between "
-                        "were never delivered"
-                    )
+            if self.config.strict_frame_order:
+                _check_frame_order(summary, lo_frame)
             commit_ord = summary["commit_ord"]
             batch_hwm = None
             if self.config.commit_messages and commit_ord is not None:
@@ -511,7 +485,7 @@ class MultiTablePipeline:
                         data, commit_ord,
                         has_commits=self.config.commit_messages,
                     )
-                    folded = fold_changes(gated, schema_t, salt=self.salt)
+                    folded = fold_changes(gated, schema_t)
                     return t, store.merge(
                         folded, schema=schema_t, batch_id=batch_id,
                         hwm_override=batch_hwm,
@@ -539,15 +513,10 @@ class MultiTablePipeline:
 
         n_pending = 0
         if pending_out is not None and self.config.commit_messages:
-            from pyspark.sql import Observation
-
-            wm_frame = commit_ord[0] if commit_ord else lo_frame
-            obs = Observation(f"pending_mt_{batch_id}")
-            pending = fresh.where(F.col("frame_seq") > wm_frame).observe(
-                obs, F.count(F.lit(1)).alias("n")
+            n_pending = _write_pending(
+                fresh, commit_ord[0] if commit_ord else lo_frame,
+                pending_out, f"pending_mt_{batch_id}",
             )
-            pending.write.mode("overwrite").parquet(pending_out)
-            n_pending = int(obs.get["n"])
         metrics["pending_frames"] = n_pending
         return metrics
 

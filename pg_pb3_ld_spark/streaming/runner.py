@@ -36,7 +36,6 @@ def run_stream(
     config: EngineConfig | None = None,
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = None,
-    salt: int = 0,
     collect_metrics: list | None = None,
     apply_mode: str = "cow",
     compact_min_deltas: int = 0,
@@ -52,7 +51,7 @@ def run_stream(
     high-rate streaming ingest shape at 10^10 events.
     """
     pipe = IngestPipeline(
-        spark, store, config or EngineConfig(), salt=salt,
+        spark, store, config or EngineConfig(),
         apply_mode=apply_mode, compact_min_deltas=compact_min_deltas,
     )
     return _run_foreach_batch(

@@ -33,7 +33,7 @@ from pg_pb3_ld_spark.pb3.encoder import (
     encode_table,
 )
 from pg_pb3_ld_spark.pb3.pgtypes import encode_value
-from pg_pb3_ld_spark.schema import TargetColumn, TargetSchema
+from pg_pb3_ld_spark.schema import TargetColumn
 
 
 def _cfg(**kw):
@@ -110,33 +110,20 @@ def test_int2_schema_evolution_e2e(spark, tmpdir_path):
 
 
 def test_int2_binary_jvm_projection_signed(spark):
-    """ADVICE #3: the JVM projection path must wrap binary int2 at
+    """ADVICE #3: the JVM probe projection must wrap binary int2 at
     2^15 — 0xFFFF is -1, not 65535."""
-    from pg_pb3_ld_spark.operators.project import project_typed
-
-    schema = TargetSchema(
-        "t",
-        [
-            TargetColumn("k", wire.OID_TEXT, "string", is_key=True),
-            TargetColumn("v", wire.OID_INT2, "smallint"),
-        ],
+    from pg_pb3_ld_spark.operators.project import (
+        project_evolved_from_probe,
     )
-    row = {
-        "frame_seq": 0, "lsn": 1, "offset_idx": 0, "op": "INSERT",
-        "schema_name": "public", "table_name": "t", "table_oid": 1,
-        "key_names": [], "key_values": [], "key_nulls": [],
-        "key_oids": [], "key_formats": [],
-        "new_names": ["k", "v"],
-        "new_values": [b"a", b"\xff\xff"],
-        "new_nulls": [False, False],
-        "new_oids": [wire.OID_TEXT, wire.OID_INT2],
-        "new_formats": [False, True],
-    }
-    from pg_pb3_ld_spark.operators.decode import GENERIC_CHANGE_DDL
 
-    df = spark.createDataFrame([row], GENERIC_CHANGE_DDL)
-    out = project_typed(df, schema).collect()[0]
-    assert out["v"] == -1
+    df = spark.createDataFrame(
+        [(["v"], [b"\xff\xff"], [False], [True])],
+        "_x_names array<string>, _x_values array<binary>, "
+        "_x_nulls array<boolean>, _x_formats array<boolean>",
+    )
+    col = TargetColumn("v", wire.OID_INT2, "smallint")
+    out = project_evolved_from_probe(df, [col]).collect()[0]
+    assert out["v"] == -1 and out["v_set"]
 
 
 def test_offset_bound_guard():

@@ -25,7 +25,6 @@ import os
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pg_pb3_ld_spark.functions import dedup
 from pg_pb3_ld_spark.schema import transcripts_schema
@@ -191,59 +190,6 @@ def test_audio_sample_null_id_does_not_kill_batch(spark):
             for r in sample_audio_frames(df).collect()}
     assert set(rows) == {-1, 9}
     assert all(e is not None for e in rows.values())
-
-
-# ------------------------------------------- bounded txn-id collect
-
-
-def test_adaptive_shift_bounds_driver_rows():
-    from pg_pb3_ld_spark.operators.txn import (
-        MAX_DRIVER_CHUNKS, _adaptive_shift,
-    )
-
-    # 10^6 frames at the default shift 8 would be ~3906 chunks (fits);
-    # 10^10 frames would be 39M — the adaptive shift must clamp it
-    for n_frames in (10**6, 10**8, 10**10, 10**13):
-        shift = _adaptive_shift(0, n_frames - 1, 8)
-        n_chunks = ((n_frames - 1) >> shift) + 1
-        assert n_chunks <= MAX_DRIVER_CHUNKS, (n_frames, shift, n_chunks)
-        assert shift >= 8
-    # sparse high range: what matters is the SPAN, not the magnitude
-    shift = _adaptive_shift(10**12, 10**12 + 1000, 8)
-    assert shift == 8
-
-
-def test_assign_txn_ids_equivalent_under_forced_adaptation(spark):
-    """A stream whose frame range forces the shift up must produce the
-    same txn ids as the plain small-range stream (ids depend only on
-    BEGIN order, never on chunk geometry)."""
-    from pg_pb3_ld_spark.operators import txn as txn_ops
-
-    rows = []
-    fs = 0
-    for t in range(20):
-        rows.append((fs, 0, "BEGIN"))
-        rows.append((fs, 1, "INSERT"))
-        rows.append((fs + 1, 0, "INSERT"))
-        rows.append((fs + 1, 1, "COMMIT"))
-        fs += 2
-    df = spark.createDataFrame(rows, "frame_seq long, offset_idx int, op string")
-    want = {
-        (r["frame_seq"], r["offset_idx"]): r["txn_id"]
-        for r in txn_ops.assign_txn_ids(df).collect()
-    }
-    # spread the same stream over a 10^9-frame range: with cap 4096 the
-    # shift must rise (range>>8 ≈ 4M chunks), ids must not change
-    spread = df.withColumn(
-        "frame_seq", F.col("frame_seq") * (10**9 // 40)
-    )
-    got = {
-        (r["frame_seq"], r["offset_idx"]): r["txn_id"]
-        for r in txn_ops.assign_txn_ids(spread).collect()
-    }
-    scale = 10**9 // 40
-    assert got == {(f * scale, o): t for (f, o), t in want.items()}
-    assert sorted(set(got.values())) == list(range(1, 21))
 
 
 # --------------------------------------------------- JPEG walk repair

@@ -7,11 +7,7 @@
 2. ivf_assign with a zero-norm vector: cosine() is NaN and under ANSI
    mode round(NaN).cast('long') used to throw mid-job; now the row
    lands deterministically in the lowest list.
-3. _adaptive_shift on UNALIGNED frame ranges: the distinct-chunk count
-   is (max>>s)-(min>>s)+1, one more than ((max-min)>>s)+1 when the
-   range straddles an extra boundary — the driver collect must be
-   exactly capped.
-4. Orphan reclaim is mutually exclusive: when two writers both judge
+3. Orphan reclaim is mutually exclusive: when two writers both judge
    the same dir dead, exactly one wins; the loser raises
    CommitConflictError and the winner's committed snapshot survives —
    including the TOCTOU where the dir goes stale→live between the
@@ -23,7 +19,6 @@ from __future__ import annotations
 import os
 import shutil
 
-import numpy as np
 import pytest
 
 from pg_pb3_ld_spark.schema import transcripts_schema
@@ -113,29 +108,6 @@ def test_ivf_assign_zero_norm_centroid_no_ansi_throw(spark):
     got = {r["vec_id"]: r["list_id"]
            for r in ivf_assign(base, cents).collect()}
     assert got[1] == 1 and got[2] == 2
-
-
-# ----------------------------------------- adaptive shift exact cap
-
-
-def test_adaptive_shift_unaligned_range_exactly_capped():
-    from pg_pb3_ld_spark.operators.txn import _adaptive_shift
-
-    # span 3 at shift 1 → old bound said 2 chunks, real chunks are
-    # {0, 1, 2} = 3 — the unaligned straddle the old formula missed
-    s = _adaptive_shift(1, 4, 1, cap=2)
-    chunks = (4 >> s) - (1 >> s) + 1
-    assert chunks <= 2, (s, chunks)
-
-    rng = np.random.RandomState(7)
-    for _ in range(300):
-        lo = int(rng.randint(0, 1 << 40))
-        hi = lo + int(rng.randint(0, 1 << 30))
-        cap = int(rng.randint(2, 64))
-        s = _adaptive_shift(lo, hi, 0, cap=cap)
-        assert (hi >> s) - (lo >> s) + 1 <= cap, (lo, hi, cap, s)
-        if s > 0:  # minimality: one step lower must overflow the cap
-            assert (hi >> (s - 1)) - (lo >> (s - 1)) + 1 > cap
 
 
 # --------------------------------- orphan reclaim mutual exclusion

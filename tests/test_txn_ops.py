@@ -1,93 +1,73 @@
-"""Unit tests for transaction assembly / gating operators."""
+"""Unit tests for commit gating: the batch pre-scan's commit
+watermark and the gate it drives."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from pg_pb3_ld_spark.operators.txn import (
-    assign_txn_ids,
-    batch_summary,
+    batch_summary_typed,
     gate_by_commit_watermark,
-    gate_committed,
 )
 
+# the typed decode's shape, reduced to what the pre-scan and the gate
+# read: ``_x_names``/``_x_oids`` carry only wire columns outside the
+# decode schema (null when there are none)
 DDL = (
     "frame_seq long, offset_idx int, lsn long, op string, "
-    "new_names array<string>, new_oids array<long>"
+    "table_name string, _x_names array<string>, _x_oids array<long>, "
+    "_split boolean"
 )
 
 
 def _mk(spark, rows):
     return spark.createDataFrame(
         [
-            (f, o, 1000 + f, op, names or [], [25] * len(names or []))
+            (
+                f, o, 1000 + f, op,
+                None if op in ("BEGIN", "COMMIT") else "t",
+                names, None if names is None else [25] * len(names),
+                False,
+            )
             for f, o, op, names in rows
         ],
         DDL,
     )
 
 
-def test_assign_and_gate_txn_join_path(spark):
-    # two committed txns + one uncommitted tail (T1/T2 semantics)
+def test_commit_watermark_path_matches_join_path(spark):
+    """The scalar watermark keeps exactly the changes of committed
+    transactions and holds back the uncommitted tail."""
     df = _mk(spark, [
         (0, 0, "BEGIN", None),
-        (0, 1, "INSERT", ["a"]),
+        (0, 1, "INSERT", None),
         (0, 2, "COMMIT", None),
         (1, 0, "BEGIN", None),
-        (1, 1, "UPDATE", ["a"]),
-        (1, 2, "INSERT", ["b"]),
+        (1, 1, "UPDATE", ["zz"]),
+        (1, 2, "INSERT", None),
         (1, 3, "COMMIT", None),
         (2, 0, "BEGIN", None),
-        (2, 1, "INSERT", ["c"]),   # commit never arrives
+        (2, 1, "INSERT", None),   # commit never arrives
     ])
-    with_txn = assign_txn_ids(df)
-    ids = {
-        (r["frame_seq"], r["offset_idx"]): r["txn_id"]
-        for r in with_txn.collect()
-    }
-    assert ids[(0, 1)] == 1 and ids[(1, 1)] == 2 and ids[(2, 1)] == 3
-    gated = gate_committed(with_txn)
-    ops = sorted(
-        (r["frame_seq"], r["offset_idx"]) for r in gated.collect()
-    )
-    assert ops == [(0, 1), (1, 1), (1, 2)]  # tail held back
-
-
-def test_commit_watermark_path_matches_join_path(spark):
-    df = _mk(spark, [
-        (0, 0, "BEGIN", None),
-        (0, 1, "INSERT", ["a"]),
-        (0, 2, "COMMIT", None),
-        (1, 0, "BEGIN", None),
-        (1, 1, "UPDATE", ["a", "zz"]),
-        (1, 2, "COMMIT", None),
-        (2, 0, "BEGIN", None),
-        (2, 1, "INSERT", ["c"]),
-    ])
-    s = batch_summary(df)
-    assert s["commit_ord"][:2] == (1, 2)
+    s = batch_summary_typed(df)
+    assert s["commit_ord"] == (1, 3, 1001)
     assert s["n_commits"] == 2
-    assert ("zz", 25) in s["names"] and ("a", 25) in s["names"]
+    assert s["names"] == [("zz", 25)]
+    assert s["names_by_table"] == {"t": [("zz", 25)]}
+    assert (s["min_frame_seq"], s["max_frame_seq"], s["n_frames"]) == (0, 2, 3)
     gated = gate_by_commit_watermark(df, s["commit_ord"], has_commits=True)
     got = sorted((r["frame_seq"], r["offset_idx"]) for r in gated.collect())
-    assert got == [(0, 1), (1, 1)]
+    assert got == [(0, 1), (1, 1), (1, 2)]  # tail held back
 
 
 def test_watermark_no_commits(spark):
-    df = _mk(spark, [(0, 0, "BEGIN", None), (0, 1, "INSERT", ["a"])])
-    s = batch_summary(df)
-    assert s["commit_ord"] is None
+    df = _mk(spark, [(0, 0, "BEGIN", None), (0, 1, "INSERT", None)])
+    s = batch_summary_typed(df)
+    assert s["commit_ord"] is None and s["n_commits"] == 0
     # commit markers enabled but none seen: everything pends
     assert gate_by_commit_watermark(df, None, has_commits=True).count() == 0
     # commit markers disabled: everything applies
     assert gate_by_commit_watermark(df, None, has_commits=False).count() == 1
-
-
-def test_txn_ids_null_without_begin_markers(spark):
-    df = _mk(spark, [(0, 0, "INSERT", ["a"]), (0, 1, "INSERT", ["b"])])
-    out = assign_txn_ids(df)
-    assert all(r["txn_id"] is None for r in out.collect())
-    assert gate_committed(out).count() == 2
 
 
 def _plan_text(df, mode) -> str:
