@@ -230,12 +230,12 @@ def connected_components(
         # at the first row for non-empty graphs; partitions it leaves
         # unmaterialized are filled by round 0's join as before).  A
         # high-threshold dedup pass over a clean corpus hits this at
-        # any scale.
+        # any scale.  One row per node, like the loop's per-round
+        # groupBy(node): duplicate ids in ``nodes`` collapse here too.
         if sym.isEmpty():
-            return labels.select(
-                F.col("node").alias(id_col),
-                F.col("label").alias("cluster_id"),
-            )
+            return labels.groupBy("node").agg(
+                F.min("label").alias("cluster_id")
+            ).withColumnRenamed("node", id_col)
         prev_sum = None
         converged = False
         for it in range(max_iters):

@@ -66,11 +66,17 @@ def apportion(weights: dict[str, int], total: int) -> dict[str, int]:
 
 def _quota_df(spark, weights: dict[str, int], total: int,
               group_col: str) -> DataFrame:
+    # one JVM row exploded from an array of literal structs:
+    # createDataFrame would start a Python task per core
     quotas = apportion(weights, total)
-    return spark.createDataFrame(
-        [(s, weights[s], quotas[s]) for s in sorted(weights)],
-        f"{group_col} string, weight int, quota long",
-    )
+    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*[
+        F.struct(
+            F.lit(s).cast("string").alias(group_col),
+            F.lit(weights[s]).cast("int").alias("weight"),
+            F.lit(quotas[s]).cast("long").alias("quota"),
+        )
+        for s in sorted(weights)
+    ])))
 
 
 def mixture_sample(

@@ -121,6 +121,52 @@ def _write_pending(
     return int(obs.get["n"])
 
 
+def _above(hwm: tuple[int, int]):
+    """Rows strictly above the ``(lsn, frame_seq)`` watermark — the
+    exactly-once replay filter."""
+    lsn, frame = hwm
+    return (F.col("lsn") > lsn) | (
+        (F.col("lsn") == lsn) & (F.col("frame_seq") > frame)
+    )
+
+
+def _plan_evolution(
+    store: SnapshotStore, own_names: list, config: EngineConfig
+) -> tuple:
+    """Schema evolution for one table from its decode probe.
+
+    Returns ``(evolved schema, new columns, widened columns,
+    probe_ok)``.  A KNOWN name in the probe means its entries arrived
+    with a different oid (type change): the decoder diverted the raw
+    bytes and evolution widened the schema, so they are projected back
+    into the (wide) column.  New and widened columns are derived from
+    the probe with JVM expressions; when a new column cannot be
+    (binary-format float: no JVM IEEE bitcast), ``probe_ok`` is False
+    and the caller re-decodes with the evolved schema.  A widened
+    column that cannot be projected raises: its stragglers encoded
+    before the ALTER would be unrecoverable."""
+    from pg_pb3_ld_spark.operators.project import can_project_from_probe
+
+    schema = store.schema
+    evolved = store.evolved_schema(own_names)
+    known = {c.name for c in schema.columns}
+    new_cols = [c for c in evolved.columns if c.name not in known]
+    widened = [
+        evolved.column(n)
+        for n in dict.fromkeys(n for n, _o in own_names if n in known)
+    ]
+    if not can_project_from_probe(widened, config):
+        raise RuntimeError(
+            "binary-format float column widening cannot be projected "
+            f"from the probe (table {schema.table!r}); re-bootstrap "
+            "the store at the new type instead"
+        )
+    return (
+        evolved, new_cols, widened,
+        can_project_from_probe(new_cols, config),
+    )
+
+
 @dataclass
 class IngestPipeline:
     spark: SparkSession
@@ -170,10 +216,7 @@ class IngestPipeline:
                 f"{self.apply_mode!r}"
             )
         hwm_lsn, hwm_frame = self.store.hwm()
-        fresh = frames_df.where(
-            (F.col("lsn") > hwm_lsn)
-            | ((F.col("lsn") == hwm_lsn) & (F.col("frame_seq") > hwm_frame))
-        )
+        fresh = frames_df.where(_above((hwm_lsn, hwm_frame)))
 
         par = (
             self.config.decode_parallelism
@@ -216,52 +259,19 @@ class IngestPipeline:
                 # columns are derived from the persisted typed rows
                 # with JVM expressions — still exactly ONE decode.
                 from pg_pb3_ld_spark.operators.project import (
-                    can_project_from_probe,
                     project_evolved_from_probe,
                     project_widened_from_probe,
                 )
 
-                evolved = self.store.evolved_schema(own_names)
-                new_cols = [
-                    c for c in evolved.columns
-                    if all(c.name != o.name for o in schema.columns)
-                ]
-                # a KNOWN name in the probe means its entries arrived
-                # with a different oid (type change): the decoder
-                # diverted the raw bytes, evolution widened the
-                # schema; project them back into the (wide) column
-                widened_cols = [
-                    evolved.column(n)
-                    for n in dict.fromkeys(
-                        n for n, _o in own_names
-                        if any(c.name == n for c in schema.columns)
-                    )
-                ]
-                schema = evolved
-                if can_project_from_probe(
-                    new_cols + widened_cols, self.config
-                ):
+                schema, new_cols, widened_cols, probe_ok = (
+                    _plan_evolution(self.store, own_names, self.config)
+                )
+                if probe_ok:
                     data = project_evolved_from_probe(data, new_cols)
-                    if widened_cols:
-                        data = project_widened_from_probe(
-                            data, widened_cols
-                        )
-                elif widened_cols and not can_project_from_probe(
-                    widened_cols, self.config
-                ):
-                    # binary-format float widening: stragglers encoded
-                    # before the ALTER would be unrecoverable from the
-                    # probe (no JVM IEEE bitcast) — refuse loudly
-                    raise RuntimeError(
-                        "binary-format float column widening cannot "
-                        "be projected from the probe; re-bootstrap "
-                        "the store at the new type instead"
-                    )
                 else:
                     # binary-float ADDITIVE evolution: fall back to a
                     # full re-decode with the evolved schema (rare ×
-                    # rare); widened cols (if any) are projectable and
-                    # still need their probe merge after the re-decode
+                    # rare)
                     typed_all.unpersist()
                     typed_all = decode_typed_changes(
                         fresh, schema, self.config, parallelism=par,
@@ -273,10 +283,8 @@ class IngestPipeline:
                     data = typed_all.where(
                         F.col("table_name") == schema.table
                     )
-                    if widened_cols:
-                        data = project_widened_from_probe(
-                            data, widened_cols
-                        )
+                if widened_cols:
+                    data = project_widened_from_probe(data, widened_cols)
 
             commit_ord = summary["commit_ord"]
             data = data.drop(*PROBE_COLS, "_split")
@@ -367,7 +375,6 @@ class MultiTablePipeline:
         pending_out: str | None = None,
     ) -> dict:
         from pg_pb3_ld_spark.operators.project import (
-            can_project_from_probe,
             project_evolved_from_probe,
             project_widened_from_probe,
         )
@@ -381,10 +388,7 @@ class MultiTablePipeline:
                 )
         hwms = {t: s.hwm() for t, s in self.stores.items()}
         lo_lsn, lo_frame = min(hwms.values())
-        fresh = frames_df.where(
-            (F.col("lsn") > lo_lsn)
-            | ((F.col("lsn") == lo_lsn) & (F.col("frame_seq") > lo_frame))
-        )
+        fresh = frames_df.where(_above((lo_lsn, lo_frame)))
         par = (
             self.config.decode_parallelism
             or self.spark.sparkContext.defaultParallelism
@@ -413,34 +417,13 @@ class MultiTablePipeline:
             for t, s in self.stores.items():
                 own = summary["names_by_table"].get(t, [])
                 if self.evolve_schema and own:
-                    ev = s.evolved_schema(own)
-                    ncols = [
-                        c for c in ev.columns
-                        if all(c.name != o.name for o in s.schema.columns)
-                    ]
-                    wcols = [
-                        ev.column(n)
-                        for n in dict.fromkeys(
-                            n for n, _o in own
-                            if any(c.name == n for c in s.schema.columns)
-                        )
-                    ]
+                    ev, ncols, wcols, ok = _plan_evolution(
+                        s, own, self.config
+                    )
                     evolved[t] = ev
                     new_cols_by_table[t] = ncols
                     widened_by_table[t] = wcols
-                    if wcols and not can_project_from_probe(
-                        wcols, self.config
-                    ):
-                        raise RuntimeError(
-                            "binary-format float column widening "
-                            f"cannot be projected from the probe "
-                            f"(table {t!r}); re-bootstrap the store "
-                            "at the new type instead"
-                        )
-                    if ncols and not can_project_from_probe(
-                        ncols, self.config
-                    ):
-                        probe_ok = False
+                    probe_ok = probe_ok and ok
                 else:
                     evolved[t] = s.schema
                     new_cols_by_table[t] = []
@@ -464,14 +447,7 @@ class MultiTablePipeline:
                     schema_t = evolved[t]
                     data = typed_all.where(F.col("table_name") == t)
                     if hwms[t] > (lo_lsn, lo_frame):
-                        h_lsn, h_frame = hwms[t]
-                        data = data.where(
-                            (F.col("lsn") > h_lsn)
-                            | (
-                                (F.col("lsn") == h_lsn)
-                                & (F.col("frame_seq") > h_frame)
-                            )
-                        )
+                        data = data.where(_above(hwms[t]))
                     if probe_ok and new_cols_by_table[t]:
                         data = project_evolved_from_probe(
                             data, new_cols_by_table[t]

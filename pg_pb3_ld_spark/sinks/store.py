@@ -24,6 +24,27 @@ buckets, snapshot manifests, atomic pointer swap — on plain parquet:
   watermark filter drops already-applied frames, and the MERGE fold
   is last-write-wins per key.
 
+Every writer (``merge``, ``merge_mor``, ``compact``, ``bootstrap``,
+``repair_misplaced``) commits through one sequence, each step written
+once:
+
+1. **stage** (``_stage``) — claim the next snapshot id and a unique
+   ``staging/<uuid>/`` dir, removed on every exit path;
+2. **write buckets** (``_write_buckets``) — the writer's frame,
+   hash-partitioned and key-sorted into ``_bucket=K`` parquet dirs;
+3. **rebase the manifest** (``_rebase``) — rewritten buckets point at
+   their new files, absorb their MoR deltas, get zone maps from the
+   new parquet footers and new lineage rows (a MoR commit instead
+   appends each bucket's delta dir and drops its zone map);
+4. **fsync meta** (``_publish``) — the parent manifest plus the
+   writer's field changes is written and fsynced inside the stage, so
+   data + watermark + lineage travel together;
+5. **rename** the stage to ``snapshots/<id>`` (``_commit_staged`` —
+   the rename claims the id; collisions conflict or reclaim orphans);
+6. **swap the pointer** — fsynced ``manifest.json`` via ``os.replace``.
+
+A crash before step 6 leaves the parent snapshot current.
+
 Merge semantics per source row kind (from the D4 fold):
 
 =========  =============================================================
@@ -38,10 +59,14 @@ PATCH      partial update: only wire-present columns overwrite target
 
 from __future__ import annotations
 
+import contextlib
+import dataclasses
 import json
 import os
 import shutil
 import time
+import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -49,6 +74,73 @@ from pyspark.sql.types import StructType
 from pg_pb3_ld_spark.schema import TargetColumn, TargetSchema
 
 MANIFEST = "manifest.json"
+
+
+def _snap_rel(sid: int) -> str:
+    return os.path.join("snapshots", f"{sid:06d}")
+
+
+def _write_meta(dir_: str, meta: dict) -> None:
+    # fsync meta.json BEFORE the pointer swap publishes it: a power
+    # loss right after the swap must never leave the manifest
+    # pointing at a torn/empty meta.json
+    with open(os.path.join(dir_, "meta.json"), "w") as f:
+        json.dump(meta, f, indent=1)
+        f.flush()
+        os.fsync(f.fileno())
+
+
+def _parquet_footers(path: str):
+    """Footer metadata of every parquet file under ``path`` —
+    driver-side metadata reads, no Spark job."""
+    import pyarrow.parquet as pq
+
+    for dirpath, _dirs, fns in os.walk(path):
+        for fn in fns:
+            if fn.endswith(".parquet"):
+                yield pq.ParquetFile(os.path.join(dirpath, fn)).metadata
+
+
+def _zone_stats(path: str, cols: list[str]) -> dict[str, list]:
+    """Per-column (min, max) over the parquet footers under ``path``.
+    A column whose files lack statistics (all-null chunks, missing
+    stats) gets NO entry — absent = unprunable = safe."""
+    agg: dict[str, list] = {}
+    ok = {c: True for c in cols}
+    for md in _parquet_footers(path):
+        name_to_idx = {
+            md.schema.column(i).name: i for i in range(md.num_columns)
+        }
+        for rg in range(md.num_row_groups):
+            for c in cols:
+                if not ok.get(c) or c not in name_to_idx:
+                    ok[c] = False
+                    continue
+                st = md.row_group(rg).column(name_to_idx[c]).statistics
+                if (
+                    st is None
+                    or not st.has_min_max
+                    or st.min is None
+                    or st.max is None
+                ):
+                    ok[c] = False
+                    continue
+                mn, mx = st.min, st.max
+                if isinstance(mn, bytes):
+                    mn = mn.decode("utf-8", "replace")
+                    mx = mx.decode("utf-8", "replace")
+                cur = agg.get(c)
+                if cur is None:
+                    agg[c] = [mn, mx]
+                else:
+                    cur[0] = min(cur[0], mn)
+                    cur[1] = max(cur[1], mx)
+    return {c: v for c, v in agg.items() if ok.get(c)}
+
+
+class _Stage(NamedTuple):
+    id: int   # the snapshot id this commit claims
+    dir: str  # staging/<uuid>; renamed to snapshots/<id> on commit
 
 
 def _empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
@@ -148,21 +240,14 @@ class SnapshotStore:
                 raise ValueError(
                     f"zonemap col {zc!r}: type {ctype} not supported"
                 )
-        os.makedirs(os.path.join(root, "snapshots", "000000"), exist_ok=True)
+        snap_dir = os.path.join(root, _snap_rel(0))
+        os.makedirs(snap_dir, exist_ok=True)
         meta = {
             "snapshot_id": 0,
             "parent": None,
             "bucket_fn": bucket_fn,
             "table": schema.table,
-            "columns": [
-                {
-                    "name": c.name,
-                    "type_oid": c.type_oid,
-                    "spark_type": c.spark_type,
-                    "is_key": c.is_key,
-                }
-                for c in schema.columns
-            ],
+            "columns": [dataclasses.asdict(c) for c in schema.columns],
             "num_buckets": num_buckets,
             "hot_split_rows": int(hot_split_rows),
             "files": {},           # bucket -> dir relpath; absent = empty
@@ -174,22 +259,9 @@ class SnapshotStore:
             "lineage": {},
             "committed_at": time.time(),
         }
-        cls._write_meta(root, meta)
+        _write_meta(snap_dir, meta)
         cls._swap_pointer(root, 0)
         return cls(spark, root)
-
-    @staticmethod
-    def _write_meta(root: str, meta: dict) -> None:
-        snap_dir = os.path.join(root, "snapshots", f"{meta['snapshot_id']:06d}")
-        os.makedirs(snap_dir, exist_ok=True)
-        # fsync meta.json BEFORE the pointer swap publishes it: a power
-        # loss right after the swap must never leave the manifest
-        # pointing at a torn/empty meta.json (the commit protocol is
-        # write data → write+fsync meta → fsync+rename pointer)
-        with open(os.path.join(snap_dir, "meta.json"), "w") as f:
-            json.dump(meta, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
 
     @staticmethod
     def _swap_pointer(root: str, snapshot_id: int) -> None:
@@ -200,6 +272,22 @@ class SnapshotStore:
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(root, MANIFEST))
 
+    def _snapshot_meta(self, sid: int) -> dict | None:
+        """Snapshot ``sid``'s manifest; None when its meta.json is
+        missing or torn.  ONLY those two mean "no such snapshot": a
+        transient OSError (EMFILE, EACCES, NFS hiccup) on an intact
+        meta RAISES — treating it as missing would let ``_load_meta``
+        regress to an older snapshot, and the next merge would then
+        advance snapshot_id over a newer one and destroy committed
+        state."""
+        try:
+            with open(
+                os.path.join(self.root, _snap_rel(sid), "meta.json")
+            ) as f:
+                return json.load(f)
+        except (FileNotFoundError, json.JSONDecodeError):
+            return None
+
     def _load_meta(self) -> dict:
         with open(os.path.join(self.root, MANIFEST)) as f:
             snap = json.load(f)["snapshot"]
@@ -209,20 +297,10 @@ class SnapshotStore:
         # damage), fall back to the newest earlier snapshot with a
         # readable meta rather than bricking the table — replay from
         # the older watermark is idempotent by construction.
-        # ONLY FileNotFoundError / JSONDecodeError trigger the
-        # fallback: a transient OSError (EMFILE, EACCES, NFS hiccup)
-        # on an intact meta must RAISE, or the silent regression to an
-        # older snapshot would advance snapshot_id over a newer one on
-        # the next merge and destroy committed state.
         skipped: list[int] = []
         for sid in range(snap, -1, -1):
-            path = os.path.join(
-                self.root, "snapshots", f"{sid:06d}", "meta.json"
-            )
-            try:
-                with open(path) as f:
-                    meta = json.load(f)
-            except (FileNotFoundError, json.JSONDecodeError):
+            meta = self._snapshot_meta(sid)
+            if meta is None:
                 skipped.append(sid)
                 continue
             if skipped:
@@ -304,17 +382,13 @@ class SnapshotStore:
         Iceberg ``VERSION AS OF`` surface."""
         if as_of is None:
             return self._meta
-        path = os.path.join(
-            self.root, "snapshots", f"{as_of:06d}", "meta.json"
-        )
-        try:
-            with open(path) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
+        meta = self._snapshot_meta(as_of)
+        if meta is None:
             raise ValueError(
                 f"snapshot {as_of} does not exist (or was expired by "
                 "expire_snapshots) — history() lists readable snapshots"
             )
+        return meta
 
     def read(
         self,
@@ -423,97 +497,11 @@ class SnapshotStore:
             df = df.where(F.col(col) <= hi)
         return df
 
-    @staticmethod
-    def _bucket_row_counts(data_dir: str) -> dict[int, int]:
-        """Per-bucket row counts of a staged write from local parquet
-        footers (metadata-only reads, no Spark job)."""
-        import pyarrow.parquet as pq
-
-        out: dict[int, int] = {}
-        for d in os.listdir(data_dir):
-            if not d.startswith("_bucket="):
-                continue
-            b = int(d.split("=")[1])
-            n = 0
-            for dirpath, _dirs, fns in os.walk(os.path.join(data_dir, d)):
-                for fn in fns:
-                    if fn.endswith(".parquet"):
-                        n += (
-                            pq.ParquetFile(os.path.join(dirpath, fn))
-                            .metadata.num_rows
-                        )
-            out[b] = n
-        return out
-
-    @staticmethod
-    def _bucket_zone_stats(
-        data_dir: str, cols: list[str]
-    ) -> dict[int, dict[str, list]]:
-        """Per-bucket per-column (min, max) from the staged parquet
-        FOOTERS — metadata-only driver reads like
-        :meth:`_bucket_row_counts`, no Spark job.  A bucket whose
-        files lack statistics for a column (all-null chunks, missing
-        stats) gets NO entry for it — absent = unprunable = safe."""
-        import pyarrow.parquet as pq
-
-        out: dict[int, dict[str, list]] = {}
-        for d in os.listdir(data_dir):
-            if not d.startswith("_bucket="):
-                continue
-            b = int(d.split("=")[1])
-            agg: dict[str, list] = {}
-            ok = {c: True for c in cols}
-            for dirpath, _dirs, fns in os.walk(
-                os.path.join(data_dir, d)
-            ):
-                for fn in fns:
-                    if not fn.endswith(".parquet"):
-                        continue
-                    md = pq.ParquetFile(
-                        os.path.join(dirpath, fn)
-                    ).metadata
-                    name_to_idx = {
-                        md.schema.column(i).name: i
-                        for i in range(md.num_columns)
-                    }
-                    for rg in range(md.num_row_groups):
-                        for c in cols:
-                            if not ok.get(c) or c not in name_to_idx:
-                                ok[c] = False
-                                continue
-                            st = md.row_group(rg).column(
-                                name_to_idx[c]
-                            ).statistics
-                            if (
-                                st is None
-                                or not st.has_min_max
-                                or st.min is None
-                                or st.max is None
-                            ):
-                                ok[c] = False
-                                continue
-                            mn, mx = st.min, st.max
-                            if isinstance(mn, bytes):
-                                mn = mn.decode("utf-8", "replace")
-                                mx = mx.decode("utf-8", "replace")
-                            cur = agg.get(c)
-                            if cur is None:
-                                agg[c] = [mn, mx]
-                            else:
-                                cur[0] = min(cur[0], mn)
-                                cur[1] = max(cur[1], mx)
-            ent = {c: v for c, v in agg.items() if ok.get(c)}
-            if ent:
-                out[b] = ent
-        return out
-
     def leaf_file_rows(self) -> dict[str, int]:
         """Rows per LEAF write-partition of the current snapshot —
         ``"K"`` for an unsplit bucket, ``"K/J"`` per sub of a
         hot-split one.  This is the write-task granularity the
         hot-split exists to bound; the bench records its spread."""
-        import pyarrow.parquet as pq
-
         out: dict[str, int] = {}
         for b, rel in self._meta["files"].items():
             bdir = os.path.join(self.root, rel)
@@ -527,15 +515,9 @@ class SnapshotStore:
                 else {str(b): bdir}
             )
             for leaf, path in targets.items():
-                n = 0
-                for dirpath, _dirs, fns in os.walk(path):
-                    for fn in fns:
-                        if fn.endswith(".parquet"):
-                            n += (
-                                pq.ParquetFile(os.path.join(dirpath, fn))
-                                .metadata.num_rows
-                            )
-                out[leaf] = n
+                out[leaf] = sum(
+                    md.num_rows for md in _parquet_footers(path)
+                )
         return out
 
     # ------------------------------------------------------------ evolve
@@ -592,6 +574,64 @@ class SnapshotStore:
 
     # ------------------------------------------------------------ merge
 
+    @staticmethod
+    def _batch_stats(src: DataFrame) -> tuple[list, dict]:
+        """Per-bucket aggregate of a folded batch (one small Spark
+        job) — drives the affected buckets, the watermark and the
+        lineage of ``merge`` and ``merge_mor``.  Returns the rows and
+        the phase timings dict, seeded with ``stats``."""
+        t0 = time.time()
+        stats = src.groupBy("_bucket").agg(
+            F.count(F.lit(1)).alias("n_keys"),
+            F.sum(
+                F.when(F.col("kind") == "DELETE", 1).otherwise(0)
+            ).alias("n_del"),
+            F.sum("n_changes").alias("n_changes"),
+            F.min("last_lsn").alias("lsn_min"),
+            F.max("last_lsn").alias("lsn_max"),
+            F.max("last_frame_seq").alias("frame_max"),
+        ).collect()
+        return stats, {"stats": time.time() - t0}
+
+    def _batch_hwm(
+        self, stats: list, hwm_override: tuple[int, int] | None
+    ) -> dict:
+        """The watermark after this batch: the batch's max applied
+        (lsn, frame_seq) — or the caller's commit point — never below
+        the current one."""
+        old_lsn, old_frame = self.hwm()
+        if hwm_override is not None:
+            batch_lsn, batch_frame = hwm_override
+        else:
+            batch_lsn = max(int(r["lsn_max"]) for r in stats)
+            batch_frame = max(int(r["frame_max"]) for r in stats)
+        return {
+            "lsn": max(old_lsn, batch_lsn),
+            "frame_seq": max(old_frame, batch_frame),
+        }
+
+    @staticmethod
+    def _batch_lineage(r, batch_id: int | None) -> dict:
+        return {
+            "last_batch": batch_id,
+            "keys": int(r["n_keys"]),
+            "deletes": int(r["n_del"]),
+            "changes": int(r["n_changes"]),
+            "lsn_range": [int(r["lsn_min"]), int(r["lsn_max"])],
+        }
+
+    @staticmethod
+    def _batch_result(stats: list, phase: dict, meta: dict) -> dict:
+        return {
+            "merge_phase_sec": {k: round(v, 2) for k, v in phase.items()},
+            "snapshot_id": meta["snapshot_id"],
+            "applied_keys": int(sum(r["n_keys"] for r in stats)),
+            "applied_changes": int(sum(r["n_changes"] for r in stats)),
+            "deletes": int(sum(r["n_del"] for r in stats)),
+            "hwm_lsn": meta["hwm"]["lsn"],
+            "hwm_frame_seq": meta["hwm"]["frame_seq"],
+        }
+
     def merge(
         self,
         folded: DataFrame,
@@ -605,28 +645,17 @@ class SnapshotStore:
         ``schema`` may be an evolved superset of the store schema
         (D7); the new snapshot records the evolved columns.
         """
-        import time as _time
+        from pyspark.sql import Observation
 
         schema = schema or self.schema
         keys = [c.name for c in schema.key_columns]
         vals = [c.name for c in schema.value_columns]
-        _t: dict[str, float] = {}
 
         src = folded.withColumn("_bucket", self.bucket_expr(keys[0]))
         src = src.persist()
-        stage_dir = None
+        joined = None
         try:
-            _t0 = _time.time()
-            # batch stats: tiny agg (drives hwm + affected buckets)
-            stats = src.groupBy("_bucket").agg(
-                F.count(F.lit(1)).alias("n_keys"),
-                F.sum(F.when(F.col("kind") == "DELETE", 1).otherwise(0)).alias("n_del"),
-                F.sum("n_changes").alias("n_changes"),
-                F.min("last_lsn").alias("lsn_min"),
-                F.max("last_lsn").alias("lsn_max"),
-                F.max("last_frame_seq").alias("frame_max"),
-            ).collect()
-            _t["stats"] = _time.time() - _t0
+            stats, phase = self._batch_stats(src)
             if not stats:
                 return {"applied_keys": 0, "skipped": True}
             affected = sorted(int(r["_bucket"]) for r in stats)
@@ -679,28 +708,6 @@ class SnapshotStore:
                 no_src | (F.col("s.kind") != "DELETE")
             ).select(*merged_cols)
 
-            # stage under a UNIQUE dir (Iceberg-style): concurrent
-            # writers never collide on paths, so a failed/stale commit
-            # can never clobber a committed snapshot's files.  The
-            # snapshot id is claimed atomically at commit time by
-            # renaming the staging dir into place.
-            import uuid as _uuid
-
-            new_id = self.snapshot_id + 1
-            snap_rel = os.path.join("snapshots", f"{new_id:06d}")
-            stage_rel = os.path.join("staging", _uuid.uuid4().hex)
-            stage_dir = os.path.join(self.root, stage_rel)
-            data_dir = os.path.join(stage_dir, "data")
-            os.makedirs(data_dir)
-
-            from pyspark.sql import Observation
-
-            obs = Observation(f"merge_{new_id}")
-            result = result.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows_written"),
-            )
-
             # Hot-bucket sub-splitting (write-amplification guard):
             # project each affected bucket's merged size as its last
             # known row count (lineage) plus this batch's keys; any
@@ -708,240 +715,158 @@ class SnapshotStore:
             # ceil(projected / threshold) sub-partitions keyed by a
             # hash of the FULL key — one hot conv_id's turns split
             # across subs (a conv_id hash would keep them together).
-            # The (bucket, n_sub) table rides a broadcast join, not a
-            # literal map: per-batch literals in generated code force
-            # serial Janino recompiles.  It is built on the JVM (one
-            # row exploded from an array), so only its own tiny build
-            # stage carries the literals and no Python task starts.
             hot_rows = int(self._meta.get("hot_split_rows", 0) or 0)
-            lineage_prev = self._meta["lineage"]
             n_sub: dict[int, int] = {}
             for r in stats:
                 b = int(r["_bucket"])
-                projected = (
-                    int(lineage_prev.get(str(b), {}).get("rows", 0))
-                    + int(r["n_keys"])
-                )
+                prev = self._meta["lineage"].get(str(b), {})
+                projected = int(prev.get("rows", 0)) + int(r["n_keys"])
                 n_sub[b] = (
                     min(32, -(-projected // hot_rows))
                     if hot_rows > 0 and projected > hot_rows
                     else 1
                 )
-            if any(v > 1 for v in n_sub.values()):
-                nsub_df = F.broadcast(
-                    self.spark.range(0, 1, 1, 1).select(
-                        F.inline(F.array(*[
-                            F.struct(
-                                F.lit(b).cast("int").alias("_bucket"),
-                                F.lit(n).cast("int").alias("_nsub"),
-                            )
-                            for b, n in sorted(n_sub.items())
-                        ]))
-                    )
-                )
-                key_hash = F.xxhash64(*[F.col(k) for k in keys])
-                result = (
-                    result.join(nsub_df, "_bucket", "left")
-                    .withColumn(
-                        "_sub",
-                        F.pmod(
-                            key_hash, F.coalesce(F.col("_nsub"), F.lit(1))
-                        ).cast("int"),
-                    )
-                    .drop("_nsub")
-                )
-                part_cols = [F.col("_bucket"), F.col("_sub")]
-                write_parts = ["_bucket", "_sub"]
-                total_parts = sum(n_sub.values())
-            else:
-                part_cols = [F.col("_bucket")]
-                write_parts = ["_bucket"]
-                total_parts = max(len(affected), 1)
 
-            _t0 = _time.time()
-            (
-                result.repartition(total_parts, *part_cols)
-                .sortWithinPartitions(*keys)
-                .write.partitionBy(*write_parts)
-                .mode("overwrite")
-                .parquet(data_dir)
-            )
-            try:
-                rows_written = obs.get["rows_written"]
-            except Exception:
-                # AQE's empty-relation propagation can eliminate the
-                # CollectMetrics node when the merged result is empty
-                # at runtime (e.g. a delete-all batch) — recount
-                # exactly from the staged parquet footers instead
-                rows_written = sum(
-                    self._bucket_row_counts(data_dir).values()
+            with self._stage() as st:
+                obs = Observation(f"merge_{st.id}")
+                result = result.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("rows_written"),
                 )
-            _t["write"] = _time.time() - _t0
-
-            changes_rel = None
-            if changelog:
-                # change data feed: one row per key the batch actually
-                # changed — INSERT (no target), UPDATE, or DELETE (a
-                # DELETE without a target row is a no-op and emits
-                # nothing).  Post-image values; the pre-image is the
-                # parent snapshot via time travel.
-                t_exists = F.col("t._t_exists").isNotNull()
-                ctype = (
-                    F.when(
-                        F.col("s.kind") == "DELETE",
-                        F.when(t_exists, "DELETE"),
-                    )
-                    .when(~t_exists, "INSERT")
-                    .otherwise("UPDATE")
-                )
-                ch_cols = [F.col(k) for k in keys] + [
-                    ctype.alias("change_type")
-                ]
-                for c in vals:
-                    post = (
-                        F.when(F.col("s.kind") == "DELETE", None)
-                        .when(
-                            F.col("s.kind") == "REPLACE", F.col(f"s.{c}")
+                parts, n_parts = ("_bucket",), len(affected)
+                if any(v > 1 for v in n_sub.values()):
+                    # The (bucket, n_sub) table rides a broadcast
+                    # join, not a literal map: per-batch literals in
+                    # generated code force serial Janino recompiles.
+                    # It is built on the JVM (one row exploded from an
+                    # array), so only its own tiny build stage carries
+                    # the literals and no Python task starts.
+                    nsub_df = F.broadcast(
+                        self.spark.range(0, 1, 1, 1).select(
+                            F.inline(F.array(*[
+                                F.struct(
+                                    F.lit(b).cast("int").alias("_bucket"),
+                                    F.lit(n).cast("int").alias("_nsub"),
+                                )
+                                for b, n in sorted(n_sub.items())
+                            ]))
                         )
-                        .when(F.col(f"s.{c}_set"), F.col(f"s.{c}"))
-                        .otherwise(F.col(f"t.{c}"))
                     )
-                    ch_cols.append(post.alias(c))
-                # pre-images (Delta CDF's update_preimage face, as
-                # columns): the target row's values before this
-                # commit — NULL for INSERT.  Enables downstream
-                # incremental view maintenance (retract old, apply
-                # new) without a time-travel read per commit.
-                for c in vals:
-                    ch_cols.append(F.col(f"t.{c}").alias(f"_pre_{c}"))
-                ch_cols += [
-                    F.col("s.last_lsn").alias("last_lsn"),
-                    F.lit(new_id).cast("bigint").alias("snapshot_id"),
-                ]
-                changes = joined.where(
-                    ~no_src
-                    & ~((F.col("s.kind") == "DELETE") & ~t_exists)
-                ).select(*ch_cols)
-                _t0 = _time.time()
-                changes.write.mode("overwrite").parquet(
-                    os.path.join(stage_dir, "changes")
+                    key_hash = F.xxhash64(*[F.col(k) for k in keys])
+                    result = (
+                        result.join(nsub_df, "_bucket", "left")
+                        .withColumn(
+                            "_sub",
+                            F.pmod(
+                                key_hash,
+                                F.coalesce(F.col("_nsub"), F.lit(1)),
+                            ).cast("int"),
+                        )
+                        .drop("_nsub")
+                    )
+                    parts = ("_bucket", "_sub")
+                    n_parts = sum(n_sub.values())
+
+                t0 = time.time()
+                written = self._write_buckets(
+                    result, st, "data", n_parts, keys, parts
                 )
-                changes_rel = os.path.join(snap_rel, "changes")
-                _t["changes"] = _time.time() - _t0
+                try:
+                    rows_written = obs.get["rows_written"]
+                except Exception:
+                    # AQE's empty-relation propagation can eliminate
+                    # the CollectMetrics node when the merged result
+                    # is empty at runtime (e.g. a delete-all batch) —
+                    # recount exactly from the staged footers below
+                    rows_written = None
+                phase["write"] = time.time() - t0
 
-            # files map: affected buckets → new dirs; others inherited.
-            # partitionBy writes _bucket=K dirs, but as a *partition*
-            # column — rewrite relpaths and rely on read()'s explicit
-            # schema, so re-inject _bucket as a data column by listing
-            files = dict(self._meta["files"])
-            # relpaths point at the FINAL (post-rename) location
-            written = {
-                int(d.split("=")[1]): os.path.join(snap_rel, "data", d)
-                for d in os.listdir(data_dir)
-                if d.startswith("_bucket=")
-            }
-            deltas = dict(self._meta.get("deltas", {}))
-            for b in affected:
-                if b in written:
-                    files[str(b)] = written[b]
-                else:
-                    files.pop(str(b), None)  # bucket emptied by deletes
-                # a COW rewrite folds any outstanding MoR deltas for
-                # the bucket into the new base files (read() resolves
-                # them into `tgt`) — the delta log is now absorbed
-                deltas.pop(str(b), None)
+                changes_rel = None
+                if changelog:
+                    # change data feed: one row per key the batch
+                    # actually changed — INSERT (no target), UPDATE,
+                    # or DELETE (a DELETE without a target row is a
+                    # no-op and emits nothing).  Post-image values;
+                    # the pre-image is the parent snapshot via time
+                    # travel.
+                    t_exists = F.col("t._t_exists").isNotNull()
+                    ctype = (
+                        F.when(
+                            F.col("s.kind") == "DELETE",
+                            F.when(t_exists, "DELETE"),
+                        )
+                        .when(~t_exists, "INSERT")
+                        .otherwise("UPDATE")
+                    )
+                    ch_cols = [F.col(k) for k in keys] + [
+                        ctype.alias("change_type")
+                    ]
+                    for c in vals:
+                        post = (
+                            F.when(F.col("s.kind") == "DELETE", None)
+                            .when(
+                                F.col("s.kind") == "REPLACE",
+                                F.col(f"s.{c}"),
+                            )
+                            .when(F.col(f"s.{c}_set"), F.col(f"s.{c}"))
+                            .otherwise(F.col(f"t.{c}"))
+                        )
+                        ch_cols.append(post.alias(c))
+                    # pre-images (Delta CDF's update_preimage face, as
+                    # columns): the target row's values before this
+                    # commit — NULL for INSERT.  Enables downstream
+                    # incremental view maintenance (retract old, apply
+                    # new) without a time-travel read per commit.
+                    for c in vals:
+                        ch_cols.append(
+                            F.col(f"t.{c}").alias(f"_pre_{c}")
+                        )
+                    ch_cols += [
+                        F.col("s.last_lsn").alias("last_lsn"),
+                        F.lit(st.id).cast("bigint").alias("snapshot_id"),
+                    ]
+                    changes = joined.where(
+                        ~no_src
+                        & ~((F.col("s.kind") == "DELETE") & ~t_exists)
+                    ).select(*ch_cols)
+                    t0 = time.time()
+                    changes.write.mode("overwrite").parquet(
+                        os.path.join(st.dir, "changes")
+                    )
+                    changes_rel = os.path.join(
+                        _snap_rel(st.id), "changes"
+                    )
+                    phase["changes"] = time.time() - t0
 
-            old_lsn, old_frame = self.hwm()
-            if hwm_override is not None:
-                batch_lsn, batch_frame = hwm_override
-            else:
-                batch_lsn = max(int(r["lsn_max"]) for r in stats)
-                batch_frame = max(int(r["frame_max"]) for r in stats)
-            # written rows per bucket from the staged parquet footers:
-            # drives the NEXT merge's hot-split projection and the
-            # lineage metrics.  Driver-side metadata reads only —
-            # bounded by (affected buckets × files), no Spark job.
-            bucket_rows = self._bucket_row_counts(data_dir)
-            zmap = dict(self._meta.get("zonemap", {}))
-            zcols = self._meta.get("zonemap_cols") or []
-            if zcols:
-                zstats = self._bucket_zone_stats(data_dir, zcols)
-                for b in affected:
-                    if b in zstats:
-                        zmap[str(b)] = zstats[b]
-                    else:
-                        zmap.pop(str(b), None)
-            lineage = dict(self._meta["lineage"])
-            for r in stats:
-                b = int(r["_bucket"])
-                ent = {
-                    "last_batch": batch_id,
-                    "keys": int(r["n_keys"]),
-                    "deletes": int(r["n_del"]),
-                    "changes": int(r["n_changes"]),
-                    "lsn_range": [int(r["lsn_min"]), int(r["lsn_max"])],
-                    "rows": int(bucket_rows.get(b, 0)),
+                lin = {
+                    int(r["_bucket"]): self._batch_lineage(r, batch_id)
+                    for r in stats
                 }
-                if n_sub.get(b, 1) > 1:
-                    ent["n_sub"] = n_sub[b]
-                lineage[str(b)] = ent
-            meta = {
-                **self._meta,
-                "snapshot_id": new_id,
-                "parent": self.snapshot_id,
-                "columns": [
-                    {
-                        "name": c.name,
-                        "type_oid": c.type_oid,
-                        "spark_type": c.spark_type,
-                        "is_key": c.is_key,
-                    }
-                    for c in schema.columns
-                ],
-                "files": files,
-                "deltas": deltas,
-                "zonemap": zmap,
-                "hwm": {
-                    "lsn": max(old_lsn, batch_lsn),
-                    "frame_seq": max(old_frame, batch_frame),
-                },
-                "lineage": lineage,
-                "committed_at": time.time(),
-            }
-            if changes_rel is not None:
-                meta["changes_rel"] = changes_rel
-            else:
-                meta.pop("changes_rel", None)
-            meta.pop("total_rows", None)
-            # meta.json rides in the staging dir so data + watermark +
-            # lineage arrive together in ONE atomic rename
-            with open(os.path.join(stage_dir, "meta.json"), "w") as f:
-                json.dump(meta, f, indent=1)
-                f.flush()
-                os.fsync(f.fileno())
 
-            self._commit_staged(stage_dir, new_id, meta)
+                def entry(b, _prev, rows):
+                    ent = {**lin[b], "rows": rows}
+                    if n_sub[b] > 1:
+                        ent["n_sub"] = n_sub[b]
+                    return ent
 
+                fields, bucket_rows = self._rebase(
+                    st, written, affected, entry
+                )
+                meta = self._publish(
+                    st, schema, changes_rel,
+                    hwm=self._batch_hwm(stats, hwm_override), **fields,
+                )
+            if rows_written is None:
+                rows_written = sum(bucket_rows.values())
             return {
-                "merge_phase_sec": {k: round(v, 2) for k, v in _t.items()},
-                "snapshot_id": new_id,
-                "applied_keys": int(sum(r["n_keys"] for r in stats)),
-                "applied_changes": int(sum(r["n_changes"] for r in stats)),
-                "deletes": int(sum(r["n_del"] for r in stats)),
+                **self._batch_result(stats, phase, meta),
                 "buckets_rewritten": len(affected),
                 "rows_written": int(rows_written),
-                "hwm_lsn": meta["hwm"]["lsn"],
-                "hwm_frame_seq": meta["hwm"]["frame_seq"],
             }
         finally:
             src.unpersist()
-            try:
+            if joined is not None:
                 joined.unpersist()
-            except (NameError, UnboundLocalError):
-                pass
-            # un-renamed staging (failed/conflicted commit) is garbage
-            if stage_dir and os.path.exists(stage_dir):
-                shutil.rmtree(stage_dir, ignore_errors=True)
 
     # --------------------------------------------------- merge-on-read
 
@@ -1055,162 +980,74 @@ class SnapshotStore:
         total rows (read + join + rewrite), a MoR commit's to the
         BATCH alone.  Write amplification moves to the readers and is
         reclaimed in bulk by compaction (Iceberg v2 / Hudi MOR
-        semantics).  Watermark, lineage, additive schema evolution,
-        and the atomic-rename commit protocol are identical to
-        ``merge`` — a stream may interleave the two freely (a COW
-        merge absorbs any outstanding deltas for its buckets)."""
-        import time as _time
-
+        semantics).  Watermark, lineage and additive schema evolution
+        are identical to ``merge`` — a stream may interleave the two
+        freely (a COW merge absorbs any outstanding deltas for its
+        buckets)."""
         schema = schema or self.schema
         keys = [c.name for c in schema.key_columns]
         vals = [c.name for c in schema.value_columns]
-        _t: dict[str, float] = {}
 
         src = folded.withColumn("_bucket", self.bucket_expr(keys[0]))
         src = src.persist()
-        stage_dir = None
         try:
-            _t0 = _time.time()
-            stats = src.groupBy("_bucket").agg(
-                F.count(F.lit(1)).alias("n_keys"),
-                F.sum(
-                    F.when(F.col("kind") == "DELETE", 1).otherwise(0)
-                ).alias("n_del"),
-                F.sum("n_changes").alias("n_changes"),
-                F.min("last_lsn").alias("lsn_min"),
-                F.max("last_lsn").alias("lsn_max"),
-                F.max("last_frame_seq").alias("frame_max"),
-            ).collect()
-            _t["stats"] = _time.time() - _t0
+            stats, phase = self._batch_stats(src)
             if not stats:
                 return {"applied_keys": 0, "skipped": True}
-            affected = sorted(int(r["_bucket"]) for r in stats)
 
-            import uuid as _uuid
-
-            new_id = self.snapshot_id + 1
-            snap_rel = os.path.join("snapshots", f"{new_id:06d}")
-            stage_rel = os.path.join("staging", _uuid.uuid4().hex)
-            stage_dir = os.path.join(self.root, stage_rel)
-            delta_dir = os.path.join(stage_dir, "delta")
-            os.makedirs(delta_dir)
-
-            out_cols = (
-                [F.col("_bucket")]
-                + [F.col(k) for k in keys]
-                + [F.col("kind")]
-            )
-            for c in vals:
-                out_cols += [F.col(c), F.col(f"{c}_set")]
-            out_cols += [
-                F.col("last_lsn"),
-                F.col("last_frame_seq"),
-                F.col("n_changes"),
-                F.lit(new_id).cast("bigint").alias("_delta_seq"),
-            ]
-
-            _t0 = _time.time()
-            (
-                src.select(*out_cols)
-                .repartition(max(len(affected), 1), F.col("_bucket"))
-                .sortWithinPartitions(*keys)
-                .write.partitionBy("_bucket")
-                .mode("overwrite")
-                .parquet(delta_dir)
-            )
-            _t["write"] = _time.time() - _t0
-
-            deltas = {
-                k: list(v)
-                for k, v in self._meta.get("deltas", {}).items()
-            }
-            for d in os.listdir(delta_dir):
-                if not d.startswith("_bucket="):
-                    continue
-                b = d.split("=")[1]
-                deltas.setdefault(b, []).append(
-                    os.path.join(snap_rel, "delta", d)
+            with self._stage() as st:
+                out_cols = (
+                    [F.col("_bucket")]
+                    + [F.col(k) for k in keys]
+                    + [F.col("kind")]
                 )
-
-            old_lsn, old_frame = self.hwm()
-            if hwm_override is not None:
-                batch_lsn, batch_frame = hwm_override
-            else:
-                batch_lsn = max(int(r["lsn_max"]) for r in stats)
-                batch_frame = max(int(r["frame_max"]) for r in stats)
-            # a delta commit makes the bucket's base-file zone map a
-            # lie (reads resolve base ∪ delta) — drop it: absent =
-            # unprunable = safe, until compaction recomputes it
-            zmap = dict(self._meta.get("zonemap", {}))
-            for r in stats:
-                zmap.pop(str(int(r["_bucket"])), None)
-            lineage = dict(self._meta["lineage"])
-            for r in stats:
-                b = int(r["_bucket"])
-                prev = dict(lineage.get(str(b), {}))
-                prev.update(
-                    {
-                        "last_batch": batch_id,
-                        "keys": int(r["n_keys"]),
-                        "deletes": int(r["n_del"]),
-                        "changes": int(r["n_changes"]),
-                        "lsn_range": [
-                            int(r["lsn_min"]),
-                            int(r["lsn_max"]),
-                        ],
-                        "delta_files": len(deltas.get(str(b), [])),
-                    }
+                for c in vals:
+                    out_cols += [F.col(c), F.col(f"{c}_set")]
+                out_cols += [
+                    F.col("last_lsn"),
+                    F.col("last_frame_seq"),
+                    F.col("n_changes"),
+                    F.lit(st.id).cast("bigint").alias("_delta_seq"),
+                ]
+                t0 = time.time()
+                written = self._write_buckets(
+                    src.select(*out_cols), st, "delta", len(stats), keys
                 )
-                lineage[str(b)] = prev
-            meta = {
-                **self._meta,
-                "snapshot_id": new_id,
-                "parent": self.snapshot_id,
-                "columns": [
-                    {
-                        "name": c.name,
-                        "type_oid": c.type_oid,
-                        "spark_type": c.spark_type,
-                        "is_key": c.is_key,
+                phase["write"] = time.time() - t0
+
+                deltas = {
+                    k: list(v)
+                    for k, v in self._meta.get("deltas", {}).items()
+                }
+                for b, rel in written.items():
+                    deltas.setdefault(str(b), []).append(
+                        os.path.join(_snap_rel(st.id), rel)
+                    )
+                # a delta commit makes the bucket's base-file zone map
+                # a lie (reads resolve base ∪ delta) — drop it: absent
+                # = unprunable = safe, until compaction recomputes it
+                zmap = dict(self._meta.get("zonemap", {}))
+                lineage = dict(self._meta["lineage"])
+                for r in stats:
+                    b = str(int(r["_bucket"]))
+                    zmap.pop(b, None)
+                    lineage[b] = {
+                        **lineage.get(b, {}),
+                        **self._batch_lineage(r, batch_id),
+                        "delta_files": len(deltas.get(b, [])),
                     }
-                    for c in schema.columns
-                ],
-                "deltas": deltas,
-                "zonemap": zmap,
-                "hwm": {
-                    "lsn": max(old_lsn, batch_lsn),
-                    "frame_seq": max(old_frame, batch_frame),
-                },
-                "lineage": lineage,
-                "committed_at": time.time(),
-            }
-            # a CDF file belongs to the commit that WROTE it; never
-            # inherit the parent's (MoR deltas are their own feed)
-            meta.pop("changes_rel", None)
-            with open(os.path.join(stage_dir, "meta.json"), "w") as f:
-                json.dump(meta, f, indent=1)
-                f.flush()
-                os.fsync(f.fileno())
-
-            self._commit_staged(stage_dir, new_id, meta)
-
+                meta = self._publish(
+                    st, schema,
+                    hwm=self._batch_hwm(stats, hwm_override),
+                    deltas=deltas, zonemap=zmap, lineage=lineage,
+                )
             return {
-                "merge_phase_sec": {k: round(v, 2) for k, v in _t.items()},
-                "snapshot_id": new_id,
+                **self._batch_result(stats, phase, meta),
                 "mode": "mor",
-                "applied_keys": int(sum(r["n_keys"] for r in stats)),
-                "applied_changes": int(
-                    sum(r["n_changes"] for r in stats)
-                ),
-                "deletes": int(sum(r["n_del"] for r in stats)),
-                "buckets_delta": len(affected),
-                "hwm_lsn": meta["hwm"]["lsn"],
-                "hwm_frame_seq": meta["hwm"]["frame_seq"],
+                "buckets_delta": len(stats),
             }
         finally:
             src.unpersist()
-            if stage_dir and os.path.exists(stage_dir):
-                shutil.rmtree(stage_dir, ignore_errors=True)
 
     def delta_state(self) -> dict[int, int]:
         """Outstanding delta files per bucket (empty = fully compacted)."""
@@ -1229,9 +1066,7 @@ class SnapshotStore:
         selected buckets (default: every bucket with ≥ ``min_deltas``
         delta files) and commit a new snapshot with those buckets'
         delta logs cleared.  The watermark is untouched — compaction
-        moves bytes, not state — and the commit rides the same
-        atomic-rename protocol, so a crash mid-compaction leaves the
-        previous snapshot fully readable.
+        moves bytes, not state.
 
         At scale this is the background service that bounds read
         amplification: each compaction's cost is proportional to the
@@ -1246,92 +1081,38 @@ class SnapshotStore:
         if not cands:
             return {"compacted_buckets": 0, "skipped": True}
 
-        schema = self.schema
-        resolved = self.read(buckets=cands)
+        sid, rows = self._rewrite_resolved(
+            cands, "compacted_at_snapshot", delta_files=0
+        )
+        return {
+            "snapshot_id": sid,
+            "compacted_buckets": len(cands),
+            "rows_written": int(sum(rows.values())),
+        }
 
-        import uuid as _uuid
-
-        new_id = self.snapshot_id + 1
-        snap_rel = os.path.join("snapshots", f"{new_id:06d}")
-        stage_rel = os.path.join("staging", _uuid.uuid4().hex)
-        stage_dir = os.path.join(self.root, stage_rel)
-        data_dir = os.path.join(stage_dir, "data")
-        os.makedirs(data_dir)
-        try:
-            keys = [c.name for c in schema.key_columns]
-            (
-                resolved.repartition(
-                    max(len(cands), 1), F.col("_bucket")
-                )
-                .sortWithinPartitions(*keys)
-                .write.partitionBy("_bucket")
-                .mode("overwrite")
-                .parquet(data_dir)
+    def _rewrite_resolved(
+        self, buckets: list[int], mark: str, **lineage_fields
+    ) -> tuple[int, dict[int, int]]:
+        """Rewrite ``buckets`` as new base files from their RESOLVED
+        state (outstanding MoR deltas folded in, then cleared) and
+        commit.  The watermark is untouched — bytes move, not state.
+        Each bucket's lineage keeps its batch history and gains its new
+        row count, ``lineage_fields`` and ``mark`` = the new snapshot
+        id.  Returns (snapshot id, rows per written bucket)."""
+        resolved = self.read(buckets=buckets)
+        keys = [c.name for c in self.schema.key_columns]
+        with self._stage() as st:
+            written = self._write_buckets(
+                resolved, st, "data", len(buckets), keys
             )
-
-            files = dict(self._meta["files"])
-            deltas = {
-                k: list(v)
-                for k, v in self._meta.get("deltas", {}).items()
-            }
-            written = {
-                int(d.split("=")[1]): os.path.join(snap_rel, "data", d)
-                for d in os.listdir(data_dir)
-                if d.startswith("_bucket=")
-            }
-            bucket_rows = self._bucket_row_counts(data_dir)
-            # compaction rebuilds base files → recompute zone maps
-            # for the compacted buckets (pruning resumes for them)
-            zmap = dict(self._meta.get("zonemap", {}))
-            zcols = self._meta.get("zonemap_cols") or []
-            zstats = (
-                self._bucket_zone_stats(data_dir, zcols)
-                if zcols
-                else {}
+            fields, rows = self._rebase(
+                st, written, buckets,
+                lambda _b, prev, n: {
+                    **prev, "rows": n, **lineage_fields, mark: st.id
+                },
             )
-            lineage = dict(self._meta["lineage"])
-            for b in cands:
-                if b in written:
-                    files[str(b)] = written[b]
-                else:
-                    files.pop(str(b), None)  # emptied by deletes
-                deltas.pop(str(b), None)
-                if b in zstats:
-                    zmap[str(b)] = zstats[b]
-                else:
-                    zmap.pop(str(b), None)
-                ent = dict(lineage.get(str(b), {}))
-                ent["rows"] = int(bucket_rows.get(b, 0))
-                ent["delta_files"] = 0
-                ent["compacted_at_snapshot"] = new_id
-                lineage[str(b)] = ent
-            meta = {
-                **self._meta,
-                "snapshot_id": new_id,
-                "parent": self.snapshot_id,
-                "files": files,
-                "deltas": deltas,
-                "zonemap": zmap,
-                "lineage": lineage,
-                "committed_at": time.time(),
-            }
-            # a CDF file belongs to the commit that WROTE it; never
-            # inherit the parent's (MoR deltas are their own feed)
-            meta.pop("changes_rel", None)
-            with open(os.path.join(stage_dir, "meta.json"), "w") as f:
-                json.dump(meta, f, indent=1)
-                f.flush()
-                os.fsync(f.fileno())
-
-            self._commit_staged(stage_dir, new_id, meta)
-            return {
-                "snapshot_id": new_id,
-                "compacted_buckets": len(cands),
-                "rows_written": int(sum(bucket_rows.values())),
-            }
-        finally:
-            if stage_dir and os.path.exists(stage_dir):
-                shutil.rmtree(stage_dir, ignore_errors=True)
+            self._publish(st, **fields)
+        return st.id, rows
 
     def read_changes(
         self,
@@ -1388,9 +1169,8 @@ class SnapshotStore:
         cow_paths: list[str] = []
         mor_paths: list[str] = []
         for sid in range(int(since_snapshot) + 1, hi + 1):
-            try:
-                m = self._meta_for(sid)
-            except ValueError:
+            m = self._snapshot_meta(sid)
+            if m is None:
                 raise ValueError(
                     f"snapshot {sid} was expired — the change feed "
                     "below the retention window is gone; checkpoint "
@@ -1400,7 +1180,7 @@ class SnapshotStore:
             if rel is not None:
                 cow_paths.append(os.path.join(self.root, rel))
                 continue
-            prefix = os.path.join("snapshots", f"{sid:06d}", "delta")
+            prefix = os.path.join(_snap_rel(sid), "delta")
             mor_paths.extend(
                 os.path.join(self.root, r)
                 for rels in m.get("deltas", {}).values()
@@ -1517,7 +1297,7 @@ class SnapshotStore:
         exactly there — frames at-or-below the point are dropped by
         the standard replay filter, frames above apply incrementally.
         The load is one bucket-partitioned write (no join: there is
-        nothing to merge into), committed atomically like any merge.
+        nothing to merge into).
 
         Requires an EMPTY store (freshly created): bootstrapping over
         applied changes would silently discard them."""
@@ -1535,91 +1315,39 @@ class SnapshotStore:
         src = initial.select(
             *[F.col(c.name).cast(c.spark_type) for c in schema.columns]
         ).withColumn("_bucket", self.bucket_expr(keys[0]))
-
-        import uuid as _uuid
-
-        new_id = self.snapshot_id + 1
-        snap_rel = os.path.join("snapshots", f"{new_id:06d}")
-        stage_rel = os.path.join("staging", _uuid.uuid4().hex)
-        stage_dir = os.path.join(self.root, stage_rel)
-        data_dir = os.path.join(stage_dir, "data")
-        os.makedirs(data_dir)
-        try:
-            (
-                src.repartition(self.num_buckets, F.col("_bucket"))
-                .sortWithinPartitions(*keys)
-                .write.partitionBy("_bucket")
-                .mode("overwrite")
-                .parquet(data_dir)
+        lsn, frame = int(as_of[0]), int(as_of[1])
+        with self._stage() as st:
+            written = self._write_buckets(
+                src, st, "data", self.num_buckets, keys
             )
-            written = {
-                int(d.split("=")[1]): os.path.join(snap_rel, "data", d)
-                for d in os.listdir(data_dir)
-                if d.startswith("_bucket=")
-            }
-            bucket_rows = self._bucket_row_counts(data_dir)
-            lineage = {
-                str(b): {
+            fields, rows = self._rebase(
+                st, written, sorted(written),
+                lambda _b, _prev, n: {
                     "last_batch": batch_id,
                     "bootstrap": True,
-                    "rows": int(bucket_rows.get(b, 0)),
-                    "lsn_range": [int(as_of[0]), int(as_of[0])],
-                }
-                for b in written
-            }
-            zcols = self._meta.get("zonemap_cols") or []
-            meta = {
-                **self._meta,
-                "snapshot_id": new_id,
-                "parent": self.snapshot_id,
-                "files": {str(b): p for b, p in written.items()},
-                "zonemap": {
-                    str(b): s
-                    for b, s in (
-                        self._bucket_zone_stats(data_dir, zcols)
-                        if zcols
-                        else {}
-                    ).items()
+                    "rows": n,
+                    "lsn_range": [lsn, lsn],
                 },
-                "hwm": {
-                    "lsn": int(as_of[0]),
-                    "frame_seq": int(as_of[1]),
-                },
-                "lineage": lineage,
-                "committed_at": time.time(),
-            }
-            # a CDF file belongs to the commit that WROTE it; never
-            # inherit the parent's (MoR deltas are their own feed)
-            meta.pop("changes_rel", None)
-            with open(os.path.join(stage_dir, "meta.json"), "w") as f:
-                json.dump(meta, f, indent=1)
-                f.flush()
-                os.fsync(f.fileno())
-            self._commit_staged(stage_dir, new_id, meta)
-            return {
-                "snapshot_id": new_id,
-                "bootstrap_rows": int(sum(bucket_rows.values())),
-                "hwm_lsn": int(as_of[0]),
-                "hwm_frame_seq": int(as_of[1]),
-            }
-        finally:
-            if os.path.exists(stage_dir):
-                shutil.rmtree(stage_dir, ignore_errors=True)
+            )
+            self._publish(
+                st, hwm={"lsn": lsn, "frame_seq": frame}, **fields
+            )
+        return {
+            "snapshot_id": st.id,
+            "bootstrap_rows": int(sum(rows.values())),
+            "hwm_lsn": lsn,
+            "hwm_frame_seq": frame,
+        }
 
     def history(self) -> list[dict]:
         """Readable (un-expired) snapshots, oldest first — the
         Iceberg ``table.history()`` surface: commit chain, watermark
         progression, and per-commit kind (bootstrap / merge / delta /
         compaction) derivable from the manifests alone."""
-        snap_root = os.path.join(self.root, "snapshots")
         out = []
-        for d in sorted(os.listdir(snap_root)):
-            if not d.isdigit():
-                continue
-            try:
-                with open(os.path.join(snap_root, d, "meta.json")) as f:
-                    m = json.load(f)
-            except (FileNotFoundError, json.JSONDecodeError):
+        for d in sorted(os.listdir(os.path.join(self.root, "snapshots"))):
+            m = self._snapshot_meta(int(d)) if d.isdigit() else None
+            if m is None:
                 continue
             out.append(
                 {
@@ -1669,22 +1397,13 @@ class SnapshotStore:
         "buckets", "deep"}`` — findings never raise; the caller
         decides (a maintenance job alerts, a test asserts).
         """
-        import pyarrow.parquet as pq
-
         meta = self._meta_for(as_of)
         schema = self._schema_from(meta)
         findings: list[dict] = []
 
         def _rows_under(path: str) -> int | None:
-            n, seen = 0, False
-            for dirpath, _dirs, fns in os.walk(path):
-                for fn in fns:
-                    if fn.endswith(".parquet"):
-                        seen = True
-                        n += pq.ParquetFile(
-                            os.path.join(dirpath, fn)
-                        ).metadata.num_rows
-            return n if seen else None
+            rows = [md.num_rows for md in _parquet_footers(path)]
+            return sum(rows) if rows else None
 
         files = meta.get("files", {})
         deltas = meta.get("deltas", {})
@@ -1781,8 +1500,7 @@ class SnapshotStore:
         every bucket that holds (or should hold) mis-bucketed rows so
         each row sits under its DERIVED bucket dir, committed as a new
         snapshot compaction-style — bytes move, the watermark is
-        untouched, the atomic-rename protocol makes a crash leave the
-        parent snapshot fully readable.
+        untouched.
 
         Scope: placement only.  Full scans were already correct
         (``read()`` derives ``_bucket`` from the key); this restores
@@ -1827,85 +1545,12 @@ class SnapshotStore:
             | {int(r["_calc"]) for r in moved}
         )
         n_moved = int(sum(r["n"] for r in moved))
-
-        resolved = self.read(buckets=affected)
-
-        import uuid as _uuid
-
-        new_id = self.snapshot_id + 1
-        snap_rel = os.path.join("snapshots", f"{new_id:06d}")
-        stage_rel = os.path.join("staging", _uuid.uuid4().hex)
-        stage_dir = os.path.join(self.root, stage_rel)
-        data_dir = os.path.join(stage_dir, "data")
-        os.makedirs(data_dir)
-        try:
-            keys = [c.name for c in schema.key_columns]
-            (
-                resolved.repartition(
-                    max(len(affected), 1), F.col("_bucket")
-                )
-                .sortWithinPartitions(*keys)
-                .write.partitionBy("_bucket")
-                .mode("overwrite")
-                .parquet(data_dir)
-            )
-            files = dict(self._meta["files"])
-            deltas = {
-                k: list(v)
-                for k, v in self._meta.get("deltas", {}).items()
-            }
-            written = {
-                int(d.split("=")[1]): os.path.join(snap_rel, "data", d)
-                for d in os.listdir(data_dir)
-                if d.startswith("_bucket=")
-            }
-            bucket_rows = self._bucket_row_counts(data_dir)
-            zmap = dict(self._meta.get("zonemap", {}))
-            zcols = self._meta.get("zonemap_cols") or []
-            zstats = (
-                self._bucket_zone_stats(data_dir, zcols)
-                if zcols
-                else {}
-            )
-            lineage = dict(self._meta["lineage"])
-            for b in affected:
-                if b in written:
-                    files[str(b)] = written[b]
-                else:
-                    files.pop(str(b), None)  # emptied by the move
-                deltas.pop(str(b), None)
-                if b in zstats:
-                    zmap[str(b)] = zstats[b]
-                else:
-                    zmap.pop(str(b), None)
-                ent = dict(lineage.get(str(b), {}))
-                ent["rows"] = int(bucket_rows.get(b, 0))
-                ent["repaired_at_snapshot"] = new_id
-                lineage[str(b)] = ent
-            meta = {
-                **self._meta,
-                "snapshot_id": new_id,
-                "parent": self.snapshot_id,
-                "files": files,
-                "deltas": deltas,
-                "zonemap": zmap,
-                "lineage": lineage,
-                "committed_at": time.time(),
-            }
-            meta.pop("changes_rel", None)
-            with open(os.path.join(stage_dir, "meta.json"), "w") as f:
-                json.dump(meta, f, indent=1)
-                f.flush()
-                os.fsync(f.fileno())
-            self._commit_staged(stage_dir, new_id, meta)
-            return {
-                "snapshot_id": new_id,
-                "repaired_buckets": len(affected),
-                "moved_rows": n_moved,
-            }
-        finally:
-            if stage_dir and os.path.exists(stage_dir):
-                shutil.rmtree(stage_dir, ignore_errors=True)
+        sid, _rows = self._rewrite_resolved(affected, "repaired_at_snapshot")
+        return {
+            "snapshot_id": sid,
+            "repaired_buckets": len(affected),
+            "moved_rows": n_moved,
+        }
 
     def rebucket(
         self,
@@ -1971,12 +1616,8 @@ class SnapshotStore:
         retained = {i for i in ids if i > cur - keep_last or i == cur}
         referenced: set[int] = set()
         for sid in retained:
-            try:
-                with open(
-                    os.path.join(snap_root, f"{sid:06d}", "meta.json")
-                ) as f:
-                    m = json.load(f)
-            except (FileNotFoundError, json.JSONDecodeError):
+            m = self._snapshot_meta(sid)
+            if m is None:
                 continue
             rels = list(m.get("files", {}).values()) + [
                 rel
@@ -2001,6 +1642,127 @@ class SnapshotStore:
             "retained": sorted(retained | referenced),
         }
 
+    # ----------------------------------------------------- commit
+
+    @contextlib.contextmanager
+    def _stage(self):
+        """Claim the next snapshot id and a UNIQUE staging dir
+        (Iceberg-style): concurrent writers never collide on paths, so
+        a failed or stale commit can never clobber a committed
+        snapshot's files.  The id is owned only once ``_commit_staged``
+        renames the dir into place; whatever is left here on exit (a
+        failed or conflicted commit) is garbage and removed."""
+        st = _Stage(
+            self.snapshot_id + 1,
+            os.path.join(self.root, "staging", uuid.uuid4().hex),
+        )
+        os.makedirs(st.dir)
+        try:
+            yield st
+        finally:
+            shutil.rmtree(st.dir, ignore_errors=True)
+
+    @staticmethod
+    def _write_buckets(
+        df: DataFrame,
+        st: _Stage,
+        sub: str,
+        n: int,
+        keys: list[str],
+        parts: tuple[str, ...] = ("_bucket",),
+    ) -> dict[int, str]:
+        """Write ``df`` into the stage as ``<sub>/_bucket=K[/_sub=J]``
+        parquet: ``n`` write tasks hash-partitioned on ``parts``, each
+        sorted by the key.  Returns ``{bucket: relpath}``, relative to
+        the snapshot dir; a bucket with no rows has no entry."""
+        out = os.path.join(st.dir, sub)
+        (
+            df.repartition(n, *[F.col(p) for p in parts])
+            .sortWithinPartitions(*keys)
+            .write.partitionBy(*parts)
+            .mode("overwrite")
+            .parquet(out)
+        )
+        return {
+            int(d.split("=")[1]): os.path.join(sub, d)
+            for d in os.listdir(out)
+            if d.startswith("_bucket=")
+        }
+
+    def _rebase(
+        self, st: _Stage, written: dict[int, str], buckets: list[int],
+        entry,
+    ) -> tuple[dict, dict[int, int]]:
+        """Manifest fields of a commit that rewrote the base files of
+        ``buckets``.  Each such bucket points at its new files (or
+        drops out, emptied by deletes), absorbs its outstanding MoR
+        deltas (the rewrite read the resolved state), gets its zone
+        map from the new parquet footers, and its lineage row becomes
+        ``entry(bucket, previous row, footer row count)``.  Buckets
+        outside ``buckets`` are carried by reference.  Returns the
+        fields and the footer row counts of the written buckets."""
+        files = dict(self._meta["files"])
+        deltas = {
+            k: list(v) for k, v in self._meta.get("deltas", {}).items()
+        }
+        zmap = dict(self._meta.get("zonemap", {}))
+        lineage = dict(self._meta["lineage"])
+        zcols = self._meta.get("zonemap_cols") or []
+        rows: dict[int, int] = {}
+        for b in buckets:
+            k = str(b)
+            zone = {}
+            if b in written:
+                files[k] = os.path.join(_snap_rel(st.id), written[b])
+                path = os.path.join(st.dir, written[b])
+                rows[b] = sum(md.num_rows for md in _parquet_footers(path))
+                zone = _zone_stats(path, zcols) if zcols else {}
+            else:
+                files.pop(k, None)
+            deltas.pop(k, None)
+            if zone:
+                zmap[k] = zone
+            else:
+                zmap.pop(k, None)
+            lineage[k] = entry(b, lineage.get(k, {}), rows.get(b, 0))
+        fields = {
+            "files": files, "deltas": deltas, "zonemap": zmap,
+            "lineage": lineage,
+        }
+        return fields, rows
+
+    def _publish(
+        self,
+        st: _Stage,
+        schema: TargetSchema | None = None,
+        changes_rel: str | None = None,
+        **fields,
+    ) -> dict:
+        """Commit the stage as the next snapshot: its manifest is the
+        parent's with ``fields`` replaced, the (possibly evolved)
+        columns, and the new id, parent and commit time.  meta.json is
+        fsynced INSIDE the stage, so data + watermark + lineage arrive
+        together in ONE atomic rename.  Returns the manifest."""
+        meta = {
+            **self._meta,
+            "snapshot_id": st.id,
+            "parent": self.snapshot_id,
+            "columns": [
+                dataclasses.asdict(c)
+                for c in (schema or self.schema).columns
+            ],
+            **fields,
+            "committed_at": time.time(),
+        }
+        # a CDF file belongs to the commit that WROTE it; never
+        # inherit the parent's (MoR deltas are their own feed)
+        meta.pop("changes_rel", None)
+        if changes_rel is not None:
+            meta["changes_rel"] = changes_rel
+        _write_meta(st.dir, meta)
+        self._commit_staged(st.dir, st.id, meta)
+        return meta
+
     def _commit_staged(self, stage_dir: str, new_id: int, meta: dict) -> None:
         """Publish a fully-staged snapshot dir (data + fsynced
         meta.json inside) as snapshot ``new_id``.
@@ -2021,8 +1783,6 @@ class SnapshotStore:
         writer between ITS rename and pointer swap, so the collision
         fails loudly instead.  The caller refreshes and retries
         (idempotent via the watermark)."""
-        snap_rel = os.path.join("snapshots", f"{new_id:06d}")
-
         def _pointer() -> int | None:
             try:
                 with open(os.path.join(self.root, MANIFEST)) as f:
@@ -2038,7 +1798,7 @@ class SnapshotStore:
                 f"{self.snapshot_id} but manifest now points at "
                 f"{cur} — refresh() and retry the merge"
             )
-        snap_dir = os.path.join(self.root, snap_rel)
+        snap_dir = os.path.join(self.root, _snap_rel(new_id))
         try:
             os.rename(stage_dir, snap_dir)
         except OSError:
@@ -2063,9 +1823,7 @@ class SnapshotStore:
             # name (os.rename raises for the loser), then rmtree
             # the trash at leisure.
             def _reclaim(expected_mtime: float | None = None) -> None:
-                import uuid as _uuid
-
-                trash = snap_dir + ".trash-" + _uuid.uuid4().hex
+                trash = snap_dir + ".trash-" + uuid.uuid4().hex
                 try:
                     os.rename(snap_dir, trash)
                 except OSError:

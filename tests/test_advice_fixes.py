@@ -7,8 +7,6 @@
 2. offset_idx bound: the fold packs WAL order into
    (frame_seq << 20 | offset_idx); the encoder must flush at the
    message-count cap and the decoder must reject over-long frames.
-3. snapshot store: an unreadable meta.json for the pointed snapshot
-   falls back to the newest readable ancestor; replay converges.
 """
 
 from __future__ import annotations
@@ -159,44 +157,6 @@ def test_encoder_flushes_at_message_cap(monkeypatch):
     ops = batch.column("op").to_pylist()
     assert ops.count("INSERT") == 30
     assert ops.count("COMMIT") == 1
-
-
-def test_store_falls_back_to_readable_ancestor(spark, tmpdir_path):
-    """ADVICE #5: manifest → torn meta.json must fall back to the
-    newest readable snapshot; replaying from there converges."""
-    from pg_pb3_ld_spark.generator import generate_stream, write_frames_parquet
-    from pg_pb3_ld_spark.pipeline import IngestPipeline
-    from pg_pb3_ld_spark.schema import transcripts_schema
-    from pg_pb3_ld_spark.sinks.store import SnapshotStore
-
-    stream = generate_stream(seed=31, n_convs=6, max_turns=4, n_extra_txns=10)
-    fp = os.path.join(tmpdir_path, "frames.parquet")
-    write_frames_parquet(stream, fp)
-    frames = spark.read.parquet(fp)
-    root = os.path.join(tmpdir_path, "table")
-    store = SnapshotStore.create(spark, root, transcripts_schema(), num_buckets=4)
-    pipe = IngestPipeline(spark, store, _cfg())
-    n = len(stream.frames)
-    pipe.apply_frames(frames.where(f"frame_seq < {n // 2}"), batch_id=1)
-    good = store.snapshot_id
-    pipe.apply_frames(frames, batch_id=2)
-    latest = store.snapshot_id
-
-    # tear the committed snapshot's meta (power loss on a filesystem
-    # that reordered the meta write behind the pointer swap)
-    meta_path = os.path.join(root, "snapshots", f"{latest:06d}", "meta.json")
-    with open(meta_path, "w") as f:
-        f.write('{"snapshot_id": ')  # truncated JSON
-
-    store2 = SnapshotStore(spark, root)
-    assert store2.snapshot_id == good  # fell back to the parent
-    pipe2 = IngestPipeline(spark, store2, _cfg())
-    pipe2.apply_frames(frames, batch_id=2)
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["text"]
-        for r in store2.read_table().collect()
-    }
-    assert got == {k: v["text"] for k, v in stream.oracle.items()}
 
 
 def _key_change_stream(cfg):

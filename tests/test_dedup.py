@@ -85,6 +85,19 @@ def test_connected_components_chain(spark):
     assert got == {10: 10, 20: 10, 30: 10, 40: 40, 50: 40, 60: 60}
 
 
+def test_connected_components_edgeless_duplicate_nodes(spark):
+    """With no edges, duplicate node ids still give one row per id,
+    as they do when the graph has edges."""
+    edges = spark.createDataFrame([], "doc_a long, doc_b long")
+    nodes = spark.createDataFrame(
+        [(10,), (10,), (20,), (30,), (30,), (30,)], "doc_id long"
+    )
+    got = sorted(
+        map(tuple, dedup.connected_components(edges, nodes).collect())
+    )
+    assert got == [(10, 10), (20, 20), (30, 30)]
+
+
 def test_minhash_bands_shape(spark):
     docs = _corpus(spark)
     bands = dedup.minhash_bands(docs, k=4)

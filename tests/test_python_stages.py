@@ -6,6 +6,7 @@ a store without base files, the empty change feed — is built on the
 JVM.  A relation built with ``createDataFrame(<Python list>)`` starts
 one Python task per core, and each pays pyspark's per-task import-cache
 reset, which costs more CPU than the decode kernel of a small batch.
+The mixture manifest's per-domain quota table is built the same way.
 """
 
 from __future__ import annotations
@@ -102,3 +103,22 @@ def test_no_python_task_outside_decode(
     assert "ExistingRDD" not in _plan(changes)
     assert changes.count() == 0
     assert empty.read_table().count() == 0
+
+
+def test_mixture_quota_table_built_on_jvm(spark, monkeypatch):
+    from pg_pb3_ld_spark.functions import mixture
+
+    docs = spark.range(0, 40).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") % 3 == 0, "a").otherwise("b").alias("source"),
+    )
+    weights = {"a": 1, "b": 3, "c": 2}
+    monkeypatch.setattr(SparkSession, "createDataFrame", _forbidden)
+    manifest = mixture.mixture_sample(docs, weights, 60)
+    assert "ExistingRDD" not in _plan(manifest)
+    assert manifest.count() > 0
+    summary = mixture.mixture_summary(docs, weights, 60).collect()
+    assert {r["source"]: r["quota"] for r in summary} == (
+        mixture.apportion(weights, 60)
+    )
+    assert {r["source"]: r["weight"] for r in summary} == weights

@@ -7,14 +7,11 @@
    a frame boundary trips strict_frame_order (ADVICE high).
 2. The demoted DELETE half must not carry the _x_* evolution probe
    (a DELETE makes no value claims — ADVICE low).
-3. SnapshotStore._load_meta: fallback ONLY on genuinely missing/torn
-   meta; a transient OSError on an intact file must raise (ADVICE
-   medium).
-4. connected_components: pointer doubling (O(log d) rounds) converges
+3. connected_components: pointer doubling (O(log d) rounds) converges
    on a high-diameter path graph, lineage is checkpointed, and
    exhausting max_iters without a fixpoint RAISES instead of
    returning silently split clusters (ADVICE low + VERDICT #4).
-5. LSH bucket-size cap: a degenerate bucket (~30% of docs) is
+4. LSH bucket-size cap: a degenerate bucket (~30% of docs) is
    excluded from pair generation, pair counts stay bounded, and the
    dropped buckets are surfaced (VERDICT #1).
 """
@@ -161,64 +158,7 @@ def test_split_rows_marked_and_probe_cleared(spark):
 
 
 # ------------------------------------------------------------------
-# 3: meta recovery only on genuinely torn/missing meta
-# ------------------------------------------------------------------
-
-def _mk_store(spark, tmpdir_path):
-    from pg_pb3_ld_spark.schema import transcripts_schema
-    from pg_pb3_ld_spark.sinks.store import SnapshotStore
-
-    return SnapshotStore.create(
-        spark, os.path.join(tmpdir_path, "t"), transcripts_schema(),
-        num_buckets=2,
-    )
-
-
-def test_load_meta_transient_oserror_raises(spark, tmpdir_path):
-    """A permission error on an INTACT meta.json must raise, not
-    silently regress to an older snapshot."""
-    if os.geteuid() == 0:
-        pytest.skip("chmod-based permission test is a no-op as root")
-    store = _mk_store(spark, tmpdir_path)
-    meta_path = os.path.join(
-        store.root, "snapshots", "000000", "meta.json"
-    )
-    os.chmod(meta_path, 0)
-    try:
-        with pytest.raises(PermissionError):
-            store._load_meta()
-    finally:
-        os.chmod(meta_path, 0o644)
-
-
-def test_load_meta_missing_meta_recovers_with_warning(spark, tmpdir_path):
-    """A genuinely missing meta.json falls back to the newest readable
-    ancestor AND warns loudly, naming the skipped snapshot."""
-    store = _mk_store(spark, tmpdir_path)
-    # fabricate snapshot 1 with a manifest pointing at it, then lose
-    # its meta.json (torn write on a non-ordering filesystem)
-    snap1 = os.path.join(store.root, "snapshots", "000001")
-    os.makedirs(snap1)
-    type(store)._swap_pointer(store.root, 1)
-    with pytest.warns(RuntimeWarning, match=r"skipped unreadable.*\[1\]"):
-        meta = store._load_meta()
-    assert meta["snapshot_id"] == 0
-
-
-def test_load_meta_torn_json_recovers(spark, tmpdir_path):
-    store = _mk_store(spark, tmpdir_path)
-    snap1 = os.path.join(store.root, "snapshots", "000001")
-    os.makedirs(snap1)
-    with open(os.path.join(snap1, "meta.json"), "w") as f:
-        f.write('{"snapshot_id": 1, "hwm": {"l')  # torn mid-write
-    type(store)._swap_pointer(store.root, 1)
-    with pytest.warns(RuntimeWarning):
-        meta = store._load_meta()
-    assert meta["snapshot_id"] == 0
-
-
-# ------------------------------------------------------------------
-# 4: connected components — high diameter, checkpoint, loud failure
+# 3: connected components — high diameter, checkpoint, loud failure
 # ------------------------------------------------------------------
 
 def test_cc_high_diameter_path_graph(spark):
@@ -252,7 +192,7 @@ def test_cc_nonconvergence_raises(spark):
 
 
 # ------------------------------------------------------------------
-# 5: LSH bucket-size cap
+# 4: LSH bucket-size cap
 # ------------------------------------------------------------------
 
 def _skewed_docs(spark, n=200, hot_every=3):

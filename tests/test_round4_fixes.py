@@ -6,15 +6,10 @@
    wrap collision could silently declare a false fixpoint).
 2. connected_components over an EMPTY graph converges immediately
    (the null-sum rounds used to exhaust max_iters and raise).
-3. Snapshot-store rename collision: a FRESH colliding snapshot dir may
-   belong to a concurrent writer between its rename and its pointer
-   swap — it must raise CommitConflictError, never be rmtree'd
-   (silent loss of the other writer's merge); only dirs older than the
-   commit lease are reclaimed as crash orphans.
-4. resize_media / sample_audio_frames with a null media id: the error
+3. resize_media / sample_audio_frames with a null media id: the error
    row itself must not throw (int(NaN) in the except block used to
    kill the whole Arrow batch).
-5. JPEG segment walk: 0xFF fill bytes and length-less markers (TEM,
+4. JPEG segment walk: 0xFF fill bytes and length-less markers (TEM,
    stray RSTn) in the header section, and streams that end without
    EOI, all decode byte-identically to the clean stream.
 """
@@ -24,29 +19,8 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pytest
 
 from pg_pb3_ld_spark.functions import dedup
-from pg_pb3_ld_spark.schema import transcripts_schema
-from pg_pb3_ld_spark.sinks.store import CommitConflictError, SnapshotStore
-
-_FOLD_DDL = (
-    "conv_id string, turn_idx int, kind string, "
-    "role string, role_set boolean, text string, text_set boolean, "
-    "tool string, tool_set boolean, ts timestamp, ts_set boolean, "
-    "last_lsn long, last_frame_seq long, n_changes long"
-)
-
-
-def _folded(spark, rows):
-    return spark.createDataFrame(
-        [
-            (c, t, k, None, False, txt, txt is not None, None, False,
-             None, False, lsn, lsn, 1)
-            for c, t, k, txt, lsn in rows
-        ],
-        _FOLD_DDL,
-    )
 
 
 # ------------------------------------------------------- CC fixpoint
@@ -97,72 +71,6 @@ def test_cc_wrap_collision_not_false_fixpoint(spark):
         for r in dedup.connected_components(edges, nodes).collect()
     }
     assert got == {10: 10, 20: 10, 30: 10, 40: 10}
-
-
-# ------------------------------------------- store commit concurrency
-
-
-def test_inflight_writer_snapshot_not_destroyed(spark, tmpdir_path):
-    """Writer A has renamed its snapshot into place but not yet
-    swapped the pointer; writer B's colliding commit must conflict —
-    NOT rmtree A's fully-written snapshot (which would silently lose
-    A's merge while both writers believe they committed)."""
-    root = os.path.join(tmpdir_path, "t")
-    a = SnapshotStore.create(spark, root, transcripts_schema(), num_buckets=2)
-    b = SnapshotStore(spark, root)  # same base snapshot
-
-    # A commits, but "crashes"/stalls between rename and pointer swap
-    orig_swap = type(a)._swap_pointer
-    try:
-        type(a)._swap_pointer = staticmethod(lambda root, sid: None)
-        a.merge(_folded(spark, [("c0", 0, "PATCH", "from-a", 100)]),
-                batch_id=1, hwm_override=(100, 0))
-    finally:
-        type(a)._swap_pointer = staticmethod(orig_swap)
-    a_dir = os.path.join(root, "snapshots", "000001")
-    assert os.path.exists(os.path.join(a_dir, "meta.json"))
-
-    # B collides on snapshot id 1 while A is "in flight" (dir fresh)
-    with pytest.raises(CommitConflictError, match="in-flight"):
-        b.merge(_folded(spark, [("c1", 0, "PATCH", "from-b", 200)]),
-                batch_id=2, hwm_override=(200, 1))
-    # A's snapshot survived intact
-    assert os.path.exists(os.path.join(a_dir, "meta.json"))
-
-    # A finishes its pointer swap; B refreshes and retries cleanly
-    SnapshotStore._swap_pointer(root, 1)
-    b.refresh()
-    b.merge(_folded(spark, [("c1", 0, "PATCH", "from-b", 200)]),
-            batch_id=2, hwm_override=(200, 1))
-    final = SnapshotStore(spark, root)
-    rows = {r["conv_id"]: r["text"] for r in final.read_table().collect()}
-    assert rows == {"c0": "from-a", "c1": "from-b"}
-
-
-def test_stale_orphan_is_reclaimed(spark, tmpdir_path):
-    """A colliding dir older than the commit lease is a crash orphan
-    (pointer never swapped, no writer alive) — reclaimed so replay
-    converges without manual cleanup."""
-    root = os.path.join(tmpdir_path, "t")
-    a = SnapshotStore.create(spark, root, transcripts_schema(), num_buckets=2)
-
-    orig_swap = type(a)._swap_pointer
-    try:
-        type(a)._swap_pointer = staticmethod(lambda root, sid: None)
-        a.merge(_folded(spark, [("c0", 0, "PATCH", "crashed", 100)]),
-                batch_id=1, hwm_override=(100, 0))
-    finally:
-        type(a)._swap_pointer = staticmethod(orig_swap)
-    orphan = os.path.join(root, "snapshots", "000001")
-    old = os.stat(orphan).st_mtime - SnapshotStore.ORPHAN_LEASE_SEC - 5
-    os.utime(orphan, (old, old))
-
-    b = SnapshotStore(spark, root)  # opens at snapshot 0
-    b.merge(_folded(spark, [("c0", 0, "PATCH", "replayed", 100)]),
-            batch_id=1, hwm_override=(100, 0))
-    assert b.snapshot_id == 1
-    rows = {r["conv_id"]: r["text"] for r in b.read_table().collect()}
-    assert rows == {"c0": "replayed"}
 
 
 # --------------------------------------------------- media error rows
