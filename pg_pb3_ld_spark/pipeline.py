@@ -2,8 +2,14 @@
 
 ``raw frames → [hwm filter] → mapInArrow typed decode (D1+D2, ONE
 pass) → persist → commit-watermark gate (D3) → per-key fold (D4,
-map-side combining agg) → COW MERGE + lineage + watermark commit
+map-side combining agg) → COW/MoR MERGE + lineage + watermark commit
 (D5/D6) with additive schema evolution (D7)``.
+
+There is one apply, ``_apply``, over a ``{table: store}`` map: one
+decode against the union of the routed schemas, then each table's
+slice is gated, folded and merged into its own store.
+``IngestPipeline`` is the one-store case (the union is then the
+store's own schema); ``MultiTablePipeline`` routes N tables.
 
 Scale/action budget: a COW batch runs three actions over decoded
 data, plus the pending-tail write —
@@ -21,7 +27,8 @@ per batch in the ``trickle_cow`` benchmark trace (``run_stream``,
 COW) — two for the summary, three for the stats (one of them the
 gate watermark's single-task broadcast), four for the merge write,
 one for the pending tail, and one for ``run_stream``'s schema read
-of the carried-over tail.  Only the decode stage runs Python tasks.
+of the carried-over tail.  Steps 2–3 run once per routed table.  Only
+the decode stage runs Python tasks.
 
 Round 1 decoded every frame twice (a light summary pre-scan plus the
 typed pass); at 100 TB that second scan is the largest avoidable cost
@@ -49,8 +56,10 @@ pushdown-friendly ``lsn > hwm`` predicate against the parquet scan.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pg_pb3_ld_spark.config import EngineConfig
@@ -106,14 +115,14 @@ def _check_frame_order(summary: dict, hwm_frame: int) -> None:
 
 
 def _write_pending(
-    fresh: DataFrame, wm_frame: int, pending_out: str, name: str
+    fresh: DataFrame, wm_frame: int, pending_out: str, batch_id: int
 ) -> int:
     """Write the frames above ``wm_frame`` (the uncommitted tail) to
     ``pending_out`` for the next micro-batch; returns their count,
     observed on the write itself (no extra Spark action)."""
     from pyspark.sql import Observation
 
-    obs = Observation(name)
+    obs = Observation(f"pending_{batch_id}")
     pending = fresh.where(F.col("frame_seq") > wm_frame).observe(
         obs, F.count(F.lit(1)).alias("n")
     )
@@ -133,7 +142,7 @@ def _above(hwm: tuple[int, int]):
 def _plan_evolution(
     store: SnapshotStore, own_names: list, config: EngineConfig
 ) -> tuple:
-    """Schema evolution for one table from its decode probe.
+    """Schema evolution for one table from its (maybe empty) probe.
 
     Returns ``(evolved schema, new columns, widened columns,
     probe_ok)``.  A KNOWN name in the probe means its entries arrived
@@ -167,8 +176,164 @@ def _plan_evolution(
     )
 
 
+def _apply(
+    spark: SparkSession, stores: dict[str, SnapshotStore],
+    config: EngineConfig, evolve_schema: bool, frames_df: DataFrame,
+    batch_id: int, pending_out: str | None, apply_mode: str = "cow",
+    compact_min_deltas: int = 0, quarantine_dir: str | None = None,
+) -> tuple[dict, int, int]:
+    """Apply one batch of raw frames to every routed store; returns
+    ``({table: metrics}, pending frames, quarantined frames)``.
+    Idempotent: frames at-or-below a store's watermark are dropped, so
+    replaying any part of the stream converges to the same snapshots."""
+    from pg_pb3_ld_spark.operators.project import (
+        project_evolved_from_probe, project_widened_from_probe,
+    )
+    from pg_pb3_ld_spark.schema import union_schema
+
+    if apply_mode not in ("cow", "mor"):
+        raise ValueError(
+            f"apply_mode must be 'cow' or 'mor', got {apply_mode!r}"
+        )
+    for t, s in stores.items():
+        if s.schema.table != t:
+            raise ValueError(
+                f"store routed under {t!r} targets table "
+                f"{s.schema.table!r}"
+            )
+    hwms = {t: s.hwm() for t, s in stores.items()}
+    lo = min(hwms.values())
+    fresh = frames_df.where(_above(lo))
+    par = config.decode_parallelism or spark.sparkContext.defaultParallelism
+    quarantine = bool(quarantine_dir)
+
+    def decode(schemas: list) -> DataFrame:
+        return decode_typed_changes(
+            fresh, union_schema(schemas), config, parallelism=par,
+            quarantine=quarantine,
+        ).persist()
+
+    # single-pass decode: typed rows persisted, summary agg
+    # materializes the cache (the ONLY scan+parse of the frames).
+    # Unpersist ``cached`` itself, never its uncached projection.
+    cached = decode([s.schema for s in stores.values()])
+    try:
+        typed = cached
+        n_quarantined = 0
+        if quarantine:
+            bad = cached.where(F.col("_err").isNotNull()).select(
+                "frame_seq", "lsn", "_err", "_raw",
+                F.lit(batch_id).alias("batch_id"),
+            )
+            # count + write share the persisted typed cache; the
+            # clean path pays one cheap filter over it
+            n_quarantined = bad.count()
+            if n_quarantined:
+                bad.write.mode("append").parquet(quarantine_dir)
+            typed = cached.drop("_err", "_raw")
+        summary = batch_summary_typed(typed)
+        if config.strict_frame_order:
+            _check_frame_order(summary, lo[1])
+        commit_ord = summary["commit_ord"]
+
+        # evolution reads the PER-TABLE probe: an untracked table's
+        # unknown columns must never evolve a tracked schema (the
+        # stream interleaves every replica-identity table,
+        # decoder/pg_pb3_ld.c:300-334).  The probe carries the unknown
+        # columns' raw wire values, so evolved columns are derived
+        # from the persisted typed rows with JVM expressions — still
+        # exactly ONE decode.
+        names = summary["names_by_table"] if evolve_schema else {}
+        plans = {
+            t: _plan_evolution(s, names.get(t, []), config)
+            for t, s in stores.items()
+        }
+        redecode = not all(ok for *_, ok in plans.values())
+        if redecode:
+            # binary-float ADDITIVE evolution: ONE shared full
+            # re-decode with the evolved union (rare × rare); poison
+            # frames were already dead-lettered above — just strip
+            cached.unpersist()
+            cached = decode([p[0] for p in plans.values()])
+            typed = cached.drop("_err", "_raw") if quarantine else cached
+
+        # the applied watermark is the commit point, not the batch
+        # max — held-back frames must stay above the hwm so they
+        # re-apply with the next batch
+        batch_hwm = None
+        if config.commit_messages and commit_ord is not None:
+            batch_hwm = (commit_ord[2], commit_ord[0])
+
+        def merge_one(t: str) -> dict:
+            store = stores[t]
+            schema, new_cols, widened, _ok = plans[t]
+            data = typed.where(F.col("table_name") == t)
+            if hwms[t] > lo:
+                data = data.where(_above(hwms[t]))
+            if new_cols and not redecode:
+                data = project_evolved_from_probe(data, new_cols)
+            if widened:
+                data = project_widened_from_probe(data, widened)
+            gated = gate_by_commit_watermark(
+                data.drop(*PROBE_COLS, "_split"), commit_ord,
+                has_commits=config.commit_messages,
+            )
+            folded = fold_changes(gated, schema)
+            apply = store.merge_mor if apply_mode == "mor" else store.merge
+            metrics = apply(
+                folded, schema=schema, batch_id=batch_id,
+                hwm_override=batch_hwm,
+            )
+            if apply_mode == "mor" and compact_min_deltas > 0:
+                c = store.compact(min_deltas=compact_min_deltas)
+                metrics["compaction"] = c
+            return metrics
+
+        if config.commit_messages and commit_ord is None:
+            # batch ended mid-transaction: nothing committed
+            tables = {
+                t: dict(applied_keys=0, applied_changes=0, skipped=True)
+                for t in stores
+            }
+        elif len(stores) == 1:
+            tables = {t: merge_one(t) for t in stores}
+        else:
+            # Per-table merges are INDEPENDENT Spark actions over the
+            # shared typed cache (separate stores, separate
+            # watermarks), so run them from a small thread pool: the
+            # scheduler back-fills one table's job tail with the next
+            # table's tasks (guide §2.6) instead of serializing N
+            # stores' scheduling gaps.  Each task is wrapped on this
+            # thread so its jobs keep the caller's local properties
+            # (job group, streaming batch id) under pinned-thread
+            # mode; each wrap holds its own copy of them.  Results
+            # are deterministic — each merge touches only its own
+            # store; the dict is rebuilt in table order.
+            with ThreadPoolExecutor(max_workers=min(3, len(stores))) as pool:
+                futures = {
+                    t: pool.submit(
+                        inheritable_thread_target(spark)(merge_one), t
+                    )
+                    for t in stores
+                }
+            tables = {t: f.result() for t, f in futures.items()}
+    finally:
+        cached.unpersist()
+
+    # hold back the uncommitted tail for the next micro-batch
+    n_pending = 0
+    if pending_out is not None and config.commit_messages:
+        n_pending = _write_pending(
+            fresh, commit_ord[0] if commit_ord else lo[1],
+            pending_out, batch_id,
+        )
+    return tables, n_pending, n_quarantined
+
+
 @dataclass
 class IngestPipeline:
+    """The one-store case of ``_apply``; metrics are a flat dict."""
+
     spark: SparkSession
     store: SnapshotStore
     config: EngineConfig = field(default_factory=EngineConfig)
@@ -203,135 +368,16 @@ class IngestPipeline:
     ) -> dict:
         """Apply one batch of raw frames; returns metrics.
 
-        Idempotent: frames at-or-below the store watermark are
-        filtered out, so replaying any prefix/suffix of the stream
-        (including the whole stream) converges to the same snapshot.
-
         ``pending_out``: directory to write held-back frames (the
         uncommitted tail) as parquet for the next micro-batch.
         """
-        if self.apply_mode not in ("cow", "mor"):
-            raise ValueError(
-                f"apply_mode must be 'cow' or 'mor', got "
-                f"{self.apply_mode!r}"
-            )
-        hwm_lsn, hwm_frame = self.store.hwm()
-        fresh = frames_df.where(_above((hwm_lsn, hwm_frame)))
-
-        par = (
-            self.config.decode_parallelism
-            or self.spark.sparkContext.defaultParallelism
+        table = self.store.schema.table
+        tables, n_pending, n_quarantined = _apply(
+            self.spark, {table: self.store}, self.config,
+            self.evolve_schema, frames_df, batch_id, pending_out,
+            self.apply_mode, self.compact_min_deltas, self.quarantine_dir,
         )
-        schema = self.store.schema
-
-        # single-pass decode: typed rows persisted, summary agg
-        # materializes the cache (the ONLY scan+parse of the frames)
-        typed_all = decode_typed_changes(
-            fresh, schema, self.config, parallelism=par,
-            quarantine=bool(self.quarantine_dir),
-        ).persist()
-        try:
-            n_quarantined = 0
-            if self.quarantine_dir:
-                bad = typed_all.where(F.col("_err").isNotNull()).select(
-                    "frame_seq", "lsn", "_err", "_raw",
-                    F.lit(batch_id).alias("batch_id"),
-                )
-                # count + write share the persisted typed cache; the
-                # clean path pays one cheap filter over it
-                n_quarantined = bad.count()
-                if n_quarantined:
-                    bad.write.mode("append").parquet(self.quarantine_dir)
-                typed_all = typed_all.drop("_err", "_raw")
-            summary = batch_summary_typed(typed_all)
-            if self.config.strict_frame_order:
-                _check_frame_order(summary, hwm_frame)
-
-            data = typed_all.where(F.col("table_name") == schema.table)
-            # evolution reads the PER-TABLE probe: an untracked table's
-            # unknown columns must never evolve the tracked schema
-            # (the stream interleaves every replica-identity table,
-            # decoder/pg_pb3_ld.c:300-334)
-            own_names = summary["names_by_table"].get(schema.table, [])
-            if self.evolve_schema and own_names:
-                # evolution batch: unknown wire columns appeared.  The
-                # probe carries their raw wire values, so the evolved
-                # columns are derived from the persisted typed rows
-                # with JVM expressions — still exactly ONE decode.
-                from pg_pb3_ld_spark.operators.project import (
-                    project_evolved_from_probe,
-                    project_widened_from_probe,
-                )
-
-                schema, new_cols, widened_cols, probe_ok = (
-                    _plan_evolution(self.store, own_names, self.config)
-                )
-                if probe_ok:
-                    data = project_evolved_from_probe(data, new_cols)
-                else:
-                    # binary-float ADDITIVE evolution: fall back to a
-                    # full re-decode with the evolved schema (rare ×
-                    # rare)
-                    typed_all.unpersist()
-                    typed_all = decode_typed_changes(
-                        fresh, schema, self.config, parallelism=par,
-                        quarantine=bool(self.quarantine_dir),
-                    ).persist()
-                    if self.quarantine_dir:
-                        # already dead-lettered above — just strip
-                        typed_all = typed_all.drop("_err", "_raw")
-                    data = typed_all.where(
-                        F.col("table_name") == schema.table
-                    )
-                if widened_cols:
-                    data = project_widened_from_probe(data, widened_cols)
-
-            commit_ord = summary["commit_ord"]
-            data = data.drop(*PROBE_COLS, "_split")
-            gated = gate_by_commit_watermark(
-                data, commit_ord, has_commits=self.config.commit_messages
-            )
-            folded = fold_changes(gated, schema)
-
-            # the applied watermark is the commit point, not the batch
-            # max — held-back frames must stay above the hwm so they
-            # re-apply with the next batch
-            batch_hwm = None
-            if self.config.commit_messages and commit_ord is not None:
-                batch_hwm = (commit_ord[2], commit_ord[0])
-
-            if self.config.commit_messages and commit_ord is None:
-                # batch ended mid-transaction: nothing committed
-                metrics = {"applied_keys": 0, "applied_changes": 0,
-                           "skipped": True}
-            else:
-                apply = (
-                    self.store.merge_mor
-                    if self.apply_mode == "mor"
-                    else self.store.merge
-                )
-                metrics = apply(
-                    folded, schema=schema, batch_id=batch_id,
-                    hwm_override=batch_hwm,
-                )
-                if (
-                    self.apply_mode == "mor"
-                    and self.compact_min_deltas > 0
-                ):
-                    c = self.store.compact(
-                        min_deltas=self.compact_min_deltas
-                    )
-                    metrics["compaction"] = c
-        finally:
-            typed_all.unpersist()
-
-        # hold back the uncommitted tail for the next micro-batch
-        n_pending = 0
-        if pending_out is not None and self.config.commit_messages:
-            n_pending = _write_pending(
-                fresh, commit_ord[0] if commit_ord else hwm_frame,
-                pending_out, f"pending_{batch_id}",
-            )
+        metrics = tables[table]
         metrics["pending_frames"] = n_pending
         if self.quarantine_dir:
             metrics["quarantined_frames"] = n_quarantined
@@ -374,127 +420,11 @@ class MultiTablePipeline:
         batch_id: int = 0,
         pending_out: str | None = None,
     ) -> dict:
-        from pg_pb3_ld_spark.operators.project import (
-            project_evolved_from_probe,
-            project_widened_from_probe,
+        tables, n_pending, _ = _apply(
+            self.spark, self.stores, self.config, self.evolve_schema,
+            frames_df, batch_id, pending_out,
         )
-        from pg_pb3_ld_spark.schema import union_schema
-
-        for t, s in self.stores.items():
-            if s.schema.table != t:
-                raise ValueError(
-                    f"store routed under {t!r} targets table "
-                    f"{s.schema.table!r}"
-                )
-        hwms = {t: s.hwm() for t, s in self.stores.items()}
-        lo_lsn, lo_frame = min(hwms.values())
-        fresh = frames_df.where(_above((lo_lsn, lo_frame)))
-        par = (
-            self.config.decode_parallelism
-            or self.spark.sparkContext.defaultParallelism
-        )
-        union = union_schema([s.schema for s in self.stores.values()])
-        typed_all = decode_typed_changes(
-            fresh, union, self.config, parallelism=par
-        ).persist()
-        metrics: dict = {"tables": {}}
-        try:
-            summary = batch_summary_typed(typed_all)
-            if self.config.strict_frame_order:
-                _check_frame_order(summary, lo_frame)
-            commit_ord = summary["commit_ord"]
-            batch_hwm = None
-            if self.config.commit_messages and commit_ord is not None:
-                batch_hwm = (commit_ord[2], commit_ord[0])
-
-            # per-table evolution decision (probe-projection fast path;
-            # ONE shared re-decode with the evolved union if any table
-            # needs the full fallback — rare × rare)
-            evolved: dict[str, "TargetSchema"] = {}
-            new_cols_by_table: dict[str, list] = {}
-            widened_by_table: dict[str, list] = {}
-            probe_ok = True
-            for t, s in self.stores.items():
-                own = summary["names_by_table"].get(t, [])
-                if self.evolve_schema and own:
-                    ev, ncols, wcols, ok = _plan_evolution(
-                        s, own, self.config
-                    )
-                    evolved[t] = ev
-                    new_cols_by_table[t] = ncols
-                    widened_by_table[t] = wcols
-                    probe_ok = probe_ok and ok
-                else:
-                    evolved[t] = s.schema
-                    new_cols_by_table[t] = []
-                    widened_by_table[t] = []
-            if not probe_ok:
-                typed_all.unpersist()
-                union = union_schema(list(evolved.values()))
-                typed_all = decode_typed_changes(
-                    fresh, union, self.config, parallelism=par
-                ).persist()
-
-            if self.config.commit_messages and commit_ord is None:
-                for t in self.stores:
-                    metrics["tables"][t] = {
-                        "applied_keys": 0, "applied_changes": 0,
-                        "skipped": True,
-                    }
-            else:
-                def _merge_one(item):
-                    t, store = item
-                    schema_t = evolved[t]
-                    data = typed_all.where(F.col("table_name") == t)
-                    if hwms[t] > (lo_lsn, lo_frame):
-                        data = data.where(_above(hwms[t]))
-                    if probe_ok and new_cols_by_table[t]:
-                        data = project_evolved_from_probe(
-                            data, new_cols_by_table[t]
-                        )
-                    if widened_by_table[t]:
-                        data = project_widened_from_probe(
-                            data, widened_by_table[t]
-                        )
-                    data = data.drop(*PROBE_COLS, "_split")
-                    gated = gate_by_commit_watermark(
-                        data, commit_ord,
-                        has_commits=self.config.commit_messages,
-                    )
-                    folded = fold_changes(gated, schema_t)
-                    return t, store.merge(
-                        folded, schema=schema_t, batch_id=batch_id,
-                        hwm_override=batch_hwm,
-                    )
-
-                # Per-table merges are INDEPENDENT Spark actions over
-                # the shared typed cache (separate stores, separate
-                # watermarks), so run them from a small thread pool:
-                # the scheduler back-fills one table's job tail with
-                # the next table's tasks (guide §2.6) instead of
-                # serializing N stores' scheduling gaps.  Results are
-                # deterministic — each merge touches only its own
-                # store; the dict is rebuilt in table order below.
-                from concurrent.futures import ThreadPoolExecutor
-
-                items = list(self.stores.items())
-                with ThreadPoolExecutor(
-                    max_workers=min(3, len(items))
-                ) as pool:
-                    done = dict(pool.map(_merge_one, items))
-                for t in self.stores:
-                    metrics["tables"][t] = done[t]
-        finally:
-            typed_all.unpersist()
-
-        n_pending = 0
-        if pending_out is not None and self.config.commit_messages:
-            n_pending = _write_pending(
-                fresh, commit_ord[0] if commit_ord else lo_frame,
-                pending_out, f"pending_mt_{batch_id}",
-            )
-        metrics["pending_frames"] = n_pending
-        return metrics
+        return {"tables": tables, "pending_frames": n_pending}
 
 
 def consistent_cut(stores: dict, lsn: int) -> dict:

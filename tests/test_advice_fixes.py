@@ -7,11 +7,12 @@
 2. offset_idx bound: the fold packs WAL order into
    (frame_seq << 20 | offset_idx); the encoder must flush at the
    message-count cap and the decoder must reject over-long frames.
+
+The end-to-end apply tests of these fixes (int2 evolution, key-changing
+UPDATE split, frame-order guard) live in ``test_pipeline.py``.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pytest
@@ -30,8 +31,8 @@ from pg_pb3_ld_spark.pb3.encoder import (
     encode_insert,
     encode_table,
 )
-from pg_pb3_ld_spark.pb3.pgtypes import encode_value
 from pg_pb3_ld_spark.schema import TargetColumn
+from tests.test_pipeline import _key_change_stream
 
 
 def _cfg(**kw):
@@ -39,72 +40,6 @@ def _cfg(**kw):
         type_oids_mode="omit_nulls", formats_mode="disabled",
         binary_oid_ranges="20-23,1184", **kw,
     )
-
-
-def _int2_stream(cfg):
-    """INSERTs over transcripts where later rows add an int2 'score'
-    column (binary send form — oid 21 is inside binary_oid_ranges)."""
-    td = encode_table("public", "transcripts")
-    batcher = WireBatcher(cfg)
-    rows = []
-    for i in range(6):
-        score = None if i < 3 else (i - 4) * 12345  # -12345, 0, 12345
-        cols = [
-            FieldValue("conv_id", f"c{i}".encode(), wire.OID_TEXT),
-            FieldValue(
-                "turn_idx", encode_value(0, wire.OID_INT4, True),
-                wire.OID_INT4, is_binary=True,
-            ),
-            FieldValue("text", f"t{i}".encode(), wire.OID_TEXT),
-        ]
-        if score is not None:
-            cols.append(
-                FieldValue(
-                    "score", encode_value(score, wire.OID_INT2, True),
-                    wire.OID_INT2, is_binary=True,
-                )
-            )
-        batcher.begin_txn()
-        batcher.change(
-            wire.WMSG_INSERT,
-            encode_insert(
-                td, encode_field_set(cols, cfg.type_oids_mode, cfg.formats_mode)
-            ),
-        )
-        batcher.commit_txn()
-        rows.append((f"c{i}", score))
-    frames = [(s, lsn, fr) for s, (lsn, fr) in enumerate(batcher.frames())]
-    return frames, rows
-
-
-def test_int2_schema_evolution_e2e(spark, tmpdir_path):
-    """A mid-stream int2 column evolves into a smallint column and the
-    fused Arrow decode path types it correctly (ADVICE #1)."""
-    from pg_pb3_ld_spark.generator import GeneratedStream, write_frames_parquet
-    from pg_pb3_ld_spark.pipeline import IngestPipeline
-    from pg_pb3_ld_spark.schema import transcripts_schema
-    from pg_pb3_ld_spark.sinks.store import SnapshotStore
-
-    cfg = _cfg()
-    frames, rows = _int2_stream(cfg)
-    stream = GeneratedStream(frames, {}, transcripts_schema(), len(rows), len(rows))
-    fp = os.path.join(tmpdir_path, "frames.parquet")
-    write_frames_parquet(stream, fp)
-    store = SnapshotStore.create(
-        spark, os.path.join(tmpdir_path, "table"), transcripts_schema(),
-        num_buckets=4,
-    )
-    IngestPipeline(spark, store, cfg).apply_frames(
-        spark.read.parquet(fp), batch_id=1
-    )
-    schema = store.schema
-    assert schema.column("score").spark_type == "smallint"
-    got = {
-        r["conv_id"]: r["score"] for r in store.read_table().collect()
-    }
-    assert got == {c: s for c, s in rows}
-    # signedness: -12345 must round-trip, not wrap to 53191
-    assert got["c3"] == -12345
 
 
 def test_int2_binary_jvm_projection_signed(spark):
@@ -159,88 +94,6 @@ def test_encoder_flushes_at_message_cap(monkeypatch):
     assert ops.count("COMMIT") == 1
 
 
-def _key_change_stream(cfg):
-    """INSERT (c0,0) and (c0,1); then UPDATE that moves (c0,1) to
-    (c0,7) — key_fields carry the OLD key, new_values the NEW key
-    (pg_pb3_ld.c:370-380 replica-identity projection of the old
-    tuple)."""
-    from pg_pb3_ld_spark.pb3.encoder import encode_update
-
-    td = encode_table("public", "transcripts")
-    batcher = WireBatcher(cfg)
-
-    def _fv(name, value, oid, binary=False):
-        return FieldValue(
-            name, encode_value(value, oid, binary), oid, is_binary=binary
-        )
-
-    batcher.begin_txn()
-    for turn, text in ((0, "keep"), (1, "moves")):
-        cols = [
-            _fv("conv_id", "c0", wire.OID_TEXT),
-            _fv("turn_idx", turn, wire.OID_INT4, True),
-            _fv("role", "user", wire.OID_TEXT),
-            _fv("text", text, wire.OID_TEXT),
-        ]
-        batcher.change(
-            wire.WMSG_INSERT,
-            encode_insert(td, encode_field_set(cols, cfg.type_oids_mode)),
-        )
-    batcher.commit_txn()
-    batcher.begin_txn()
-    old_key = [
-        _fv("conv_id", "c0", wire.OID_TEXT),
-        _fv("turn_idx", 1, wire.OID_INT4, True),
-    ]
-    new_vals = [
-        _fv("conv_id", "c0", wire.OID_TEXT),
-        _fv("turn_idx", 7, wire.OID_INT4, True),
-        _fv("text", "moved", wire.OID_TEXT),
-    ]
-    batcher.change(
-        wire.WMSG_UPDATE,
-        encode_update(
-            td,
-            encode_field_set(old_key, cfg.type_oids_mode),
-            encode_field_set(new_vals, cfg.type_oids_mode),
-        ),
-    )
-    batcher.commit_txn()
-    return [(s, lsn, fr) for s, (lsn, fr) in enumerate(batcher.frames())]
-
-
-def test_key_changing_update_splits(spark, tmpdir_path):
-    """ADVICE #2: an UPDATE that changes a key column must land as
-    DELETE(old key) + INSERT(new key), not a patch of the old row."""
-    from pg_pb3_ld_spark.generator import GeneratedStream, write_frames_parquet
-    from pg_pb3_ld_spark.pipeline import IngestPipeline
-    from pg_pb3_ld_spark.schema import transcripts_schema
-    from pg_pb3_ld_spark.sinks.store import SnapshotStore
-
-    cfg = _cfg()
-    frames = _key_change_stream(cfg)
-    stream = GeneratedStream(frames, {}, transcripts_schema(), 3, 2)
-    fp = os.path.join(tmpdir_path, "frames.parquet")
-    write_frames_parquet(stream, fp)
-    store = SnapshotStore.create(
-        spark, os.path.join(tmpdir_path, "t"), transcripts_schema(),
-        num_buckets=4,
-    )
-    IngestPipeline(spark, store, cfg).apply_frames(
-        spark.read.parquet(fp), batch_id=1
-    )
-    rows = {
-        (r["conv_id"], r["turn_idx"]): r
-        for r in store.read_table().collect()
-    }
-    assert set(rows) == {("c0", 0), ("c0", 7)}  # (c0,1) moved away
-    assert rows[("c0", 7)]["text"] == "moved"
-    # TOAST-omitted column on the moving UPDATE (role) is NULL at the
-    # new key — the old-key value is unknowable to a row movement
-    assert rows[("c0", 7)]["role"] is None
-    assert rows[("c0", 0)]["text"] == "keep"
-
-
 def test_same_key_update_does_not_split(spark):
     """An UPDATE whose key_fields == new_values key stays one PATCH."""
     from pg_pb3_ld_spark.operators.decode import decode_typed_changes
@@ -263,38 +116,3 @@ def test_same_key_update_does_not_split(spark):
     assert ops.count("INSERT") == 3
     assert ops.count("DELETE") == 1
     assert ops.count("UPDATE") == 0
-
-
-def test_strict_frame_order_guard_fires(spark, tmpdir_path):
-    """A batch with a missing middle frame must fail fast (the LSN
-    watermark would otherwise silently drop the late frame as a
-    replay).  The density evidence rides the summary aggregation —
-    no separate pre-decode action."""
-    from pg_pb3_ld_spark.generator import generate_stream, write_frames_parquet
-    from pg_pb3_ld_spark.pipeline import IngestPipeline
-    from pg_pb3_ld_spark.schema import transcripts_schema
-    from pg_pb3_ld_spark.sinks.store import SnapshotStore
-
-    stream = generate_stream(seed=71, n_convs=5, max_turns=4, n_extra_txns=8)
-    fp = os.path.join(tmpdir_path, "frames.parquet")
-    write_frames_parquet(stream, fp)
-    n = len(stream.frames)
-    assert n >= 4
-    frames = spark.read.parquet(fp)
-    holey = frames.where(f"frame_seq != {n // 2}")  # drop a middle frame
-
-    store = SnapshotStore.create(
-        spark, os.path.join(tmpdir_path, "t"), transcripts_schema(),
-        num_buckets=4,
-    )
-    pipe = IngestPipeline(spark, store, _cfg())
-    with pytest.raises(RuntimeError, match="out-of-order frame delivery"):
-        pipe.apply_frames(holey, batch_id=1)
-    # nothing was applied — the guard ran before any write
-    assert store.read_table().count() == 0
-    # dense delivery afterwards still applies cleanly
-    pipe.apply_frames(frames, batch_id=2)
-    got = {
-        (r["conv_id"], r["turn_idx"]) for r in store.read_table().collect()
-    }
-    assert got == set(stream.oracle.keys())

@@ -246,6 +246,45 @@ def test_multi_table_evolution_is_per_table(spark, tmpdir_path):
     assert rows == {("c1", 0): None, ("c1", 1): "m-7"}
 
 
+def test_multi_table_merges_keep_callers_job_group(spark, tmpdir_path):
+    """Per-table merges run on pool threads; under pinned-thread mode
+    each must inherit the caller's Spark local properties, so every
+    job of the batch lands in the caller's job group (a plain pool
+    thread would run its jobs with no group at all)."""
+    changes = [
+        tt("INSERT", "c1", 0, "a"),
+        dt("INSERT", "d1", "x", 1),
+        tt("INSERT", "c1", 1, "b"),
+        dt("INSERT", "d2", "y", 2),
+    ]
+    frames = encode_routed_changes(changes, CFG, txn_every=2)
+    fdf = _write_frames(
+        spark, frames, os.path.join(tmpdir_path, "frames.parquet")
+    )
+    stores = {
+        "transcripts": SnapshotStore.create(
+            spark, os.path.join(tmpdir_path, "tt"), transcripts_schema(),
+            num_buckets=2,
+        ),
+        "doc_tags": SnapshotStore.create(
+            spark, os.path.join(tmpdir_path, "dt"), doc_tags_schema(),
+            num_buckets=2,
+        ),
+    }
+    pipe = MultiTablePipeline(spark, stores, CFG)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("multi_table_apply", "two-table batch")
+    try:
+        pipe.apply_frames(fdf, batch_id=1)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert tracker.getJobIdsForGroup("multi_table_apply")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert _dt_state(stores["doc_tags"]) == {"d1": ("x", 1), "d2": ("y", 2)}
+
+
 def test_union_schema_conflict_raises():
     a = TargetSchema(
         "a", [TargetColumn("k", wire.OID_TEXT, "string", is_key=True),

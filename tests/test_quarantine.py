@@ -202,3 +202,21 @@ def test_order_guard_counts_quarantined_frames(spark, tmp_path):
     )
     m = pipe.apply_frames(_frames_df(spark, frames, tmp_path), batch_id=1)
     assert m["quarantined_frames"] == 2  # and no RuntimeError raised
+
+
+def test_quarantine_batch_releases_decode_cache(spark, tmp_path):
+    """Dropping the dead-letter columns yields an UNCACHED projection
+    of the persisted decode; the pipeline must unpersist the persisted
+    frame itself, or every quarantine batch leaves its cache behind."""
+    frames = _corrupt(encode_routed_changes(_changes(), CFG), {3})
+    store = SnapshotStore.create(
+        spark, str(tmp_path / "t"), _schema(), num_buckets=4
+    )
+    pipe = IngestPipeline(
+        spark, store, CFG, quarantine_dir=str(tmp_path / "q")
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    m = pipe.apply_frames(_frames_df(spark, frames, tmp_path), batch_id=1)
+    assert m["quarantined_frames"] == 1
+    assert jsc.getPersistentRDDs().size() == before

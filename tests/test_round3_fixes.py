@@ -14,11 +14,12 @@
 4. LSH bucket-size cap: a degenerate bucket (~30% of docs) is
    excluded from pair generation, pair counts stay bounded, and the
    dropped buckets are surfaced (VERDICT #1).
+
+The end-to-end apply tests (key move at a frame boundary, the
+pipeline seed sweep) live in ``test_pipeline.py``.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -37,37 +38,6 @@ def _cfg(**kw):
 # ------------------------------------------------------------------
 # 1+2: key-move split rows vs frame density + probe hygiene
 # ------------------------------------------------------------------
-
-def test_key_move_at_frame_boundary_applies(spark, tmpdir_path):
-    """Tiny frames force key-move UPDATEs to land at offset_idx 0;
-    the strict_frame_order guard must NOT fire on in-order input and
-    the final table must match the generator oracle."""
-    from pg_pb3_ld_spark.generator import generate_stream, write_frames_parquet
-    from pg_pb3_ld_spark.pipeline import IngestPipeline
-    from pg_pb3_ld_spark.schema import transcripts_schema
-    from pg_pb3_ld_spark.sinks.store import SnapshotStore
-
-    cfg = _cfg(wire_message_target_size=256)
-    stream = generate_stream(
-        seed=73, n_convs=6, max_turns=5, n_extra_txns=40,
-        config=cfg, key_move_prob=0.3,
-    )
-    fp = os.path.join(tmpdir_path, "frames.parquet")
-    write_frames_parquet(stream, fp)
-    store = SnapshotStore.create(
-        spark, os.path.join(tmpdir_path, "t"), transcripts_schema(),
-        num_buckets=4,
-    )
-    pipe = IngestPipeline(spark, store, cfg)
-    assert cfg.strict_frame_order  # the guard is ON — and must not fire
-    pipe.apply_frames(spark.read.parquet(fp), batch_id=1)
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["text"]
-        for r in store.read_table().collect()
-    }
-    want = {k: v["text"] for k, v in stream.oracle.items()}
-    assert got == want
-
 
 def _key_move_with_unknown_col(cfg):
     """INSERT (c0,0)/(c0,1); then an UPDATE that moves (c0,1)→(c0,7)
@@ -256,40 +226,3 @@ def test_banded_candidates_cap(spark):
     # include the 59 clones (bucket dropped in every table)
     from_hot = [r for r in capped if r["query_id"] == 0 and r["vec_id"] < 60]
     assert from_hot == []
-
-
-# ------------------------------------------------------------------
-# pipeline seed sweep: full apply vs generator oracle across varied
-# stream shapes (key moves + tiny frames stress the split/guard path)
-# ------------------------------------------------------------------
-
-@pytest.mark.parametrize("seed,wire_target,key_move", [
-    (311, 512, 0.25),
-    (313, 4096, 0.0),
-    (317, 128, 0.4),
-])
-def test_pipeline_seed_sweep(spark, tmpdir_path, seed, wire_target, key_move):
-    from pg_pb3_ld_spark.generator import generate_stream, write_frames_parquet
-    from pg_pb3_ld_spark.pipeline import IngestPipeline
-    from pg_pb3_ld_spark.schema import transcripts_schema
-    from pg_pb3_ld_spark.sinks.store import SnapshotStore
-
-    cfg = _cfg(wire_message_target_size=wire_target)
-    stream = generate_stream(
-        seed=seed, n_convs=5, max_turns=4, n_extra_txns=25,
-        config=cfg, key_move_prob=key_move,
-    )
-    fp = os.path.join(tmpdir_path, "frames.parquet")
-    write_frames_parquet(stream, fp)
-    store = SnapshotStore.create(
-        spark, os.path.join(tmpdir_path, "t"), transcripts_schema(),
-        num_buckets=4,
-    )
-    IngestPipeline(spark, store, cfg).apply_frames(
-        spark.read.parquet(fp), batch_id=1
-    )
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["text"]
-        for r in store.read_table().collect()
-    }
-    assert got == {k: v["text"] for k, v in stream.oracle.items()}

@@ -71,21 +71,28 @@ def _mk_store(spark, tmpdir_path):
     )
 
 
-def test_load_meta_transient_oserror_raises(spark, tmpdir_path):
+def test_load_meta_transient_oserror_raises(
+    spark, tmpdir_path, monkeypatch
+):
     """A permission error on an INTACT meta.json must raise, not
-    silently regress to an older snapshot."""
-    if os.geteuid() == 0:
-        pytest.skip("chmod-based permission test is a no-op as root")
+    silently regress to an older snapshot.  The error is injected at
+    ``open`` (a ``chmod`` does not stop root from reading)."""
+    import builtins
+
     store = _mk_store(spark, tmpdir_path)
-    meta_path = os.path.join(
+    meta_path = os.path.normpath(os.path.join(
         store.root, "snapshots", "000000", "meta.json"
-    )
-    os.chmod(meta_path, 0)
-    try:
-        with pytest.raises(PermissionError):
-            store._load_meta()
-    finally:
-        os.chmod(meta_path, 0o644)
+    ))
+    real_open = builtins.open
+
+    def denying_open(file, *args, **kwargs):
+        if isinstance(file, str) and os.path.normpath(file) == meta_path:
+            raise PermissionError(13, "Permission denied", file)
+        return real_open(file, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", denying_open)
+    with pytest.raises(PermissionError):
+        store._load_meta()
 
 
 def test_load_meta_missing_meta_recovers_with_warning(spark, tmpdir_path):
